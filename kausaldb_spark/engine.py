@@ -43,6 +43,13 @@ REGISTRY_BLOCK_ID = "1" * 32
 REGISTRY_CODEBASE = "__workspace__"
 
 
+def _bare_of_unit():
+    """The bare name a stored block defines: its unit_id's last `:`
+    segment, then that segment's last `.` part."""
+    entity = F.element_at(F.split(F.col("unit_id"), ":"), -1)
+    return F.element_at(F.split(entity, r"\."), -1)
+
+
 @dataclass
 class QueryStats:
     queries_by_type: dict[str, int] = field(default_factory=dict)
@@ -91,9 +98,9 @@ class KausalEngine:
     def registry(self) -> dict[str, dict]:
         """Per-codebase link metadata: {name: {path, linked_at, last_sync_at,
         block_count, edge_count}} from the workspace-config block."""
-        rows = lk.find_block(self.store.visible(), REGISTRY_BLOCK_ID).select(
-            "content"
-        ).collect()
+        rows = lk.find_block(
+            self.store.visible(REGISTRY_CODEBASE), REGISTRY_BLOCK_ID
+        ).select("content").collect()
         if not rows:
             return {}
         try:
@@ -113,7 +120,9 @@ class KausalEngine:
             " unit_id string, codebase string, file_path string,"
             " metadata_json string, content string",
         )
-        self.store.append_blocks(block)  # resequence → last-writer-wins
+        # resequence → last-writer-wins; pin=False: a literal row is
+        # deterministic, so the sequence agg and the write may each read it
+        self.store.append_blocks(block, pin=False)
         # the registry lives IN the store as a block: rewriting it is a
         # mutation like any other, so the result cache must drop (a cached
         # keyword_search can otherwise serve the pre-write registry block
@@ -128,6 +137,8 @@ class KausalEngine:
         ]
 
     def _codebase_counts(self, codebase: str) -> dict[str, int]:
+        """Visible blocks of ``codebase`` and visible edges leaving them,
+        recounted from the whole store."""
         cb_ids = self.store.visible(codebase).select("id")
         e = self.store.visible_edges()
         return {
@@ -137,27 +148,68 @@ class KausalEngine:
             "edges": e.join(cb_ids, e.src == cb_ids.id, "left_semi").count(),
         }
 
-    def _path_filter(self, df: DataFrame, paths, keep: bool) -> DataFrame:
-        """file_path ∈ paths (keep) / ∉ paths (drop) without embedding an
+    def _written_counts(
+        self, codebase: str, ids: DataFrame, epochs: dict[str, int]
+    ) -> dict[str, int]:
+        """The registry's block and edge counts right after a link or sync
+        wrote ``codebase``, from that write's own relations rather than a
+        whole-store snapshot the registry append would discard at once.
+        ``ids`` are the codebase's visible block ids, each once, and
+        ``epochs`` every file's current ingest epoch. An edge counts when
+        both ends are among ``ids`` and its file's epoch does not shadow it:
+        BlockStore.visible_edges' rules for the edges ingestion writes,
+        which always join two blocks of one codebase. On such a codebase
+        this equals :meth:`_codebase_counts`."""
+        st = self.spark.createDataFrame(
+            sorted(epochs.items()), "_fp string, _epoch bigint"
+        )
+        e = self.store.edges()
+        e = (
+            e.join(ids, e.src == ids.id, "left_semi")
+            .join(ids, e.dst == ids.id, "left_semi")
+            .join(
+                F.broadcast(st),
+                (e.codebase == F.lit(codebase))
+                & (e.src_file == F.col("_fp"))
+                & (e.ingest_seq < F.col("_epoch")),
+                "left_anti",
+            )
+        )
+        return {"blocks": ids.count(), "edges": e.count()}
+
+    def _file_state(self, codebase: str) -> dict[str, tuple[str | None, int]]:
+        """{file_path: (content_hash, ingest_seq)} of the codebase's current
+        file state; a NULL hash marks a removed file."""
+        return {
+            r["file_path"]: (r["content_hash"], r["ingest_seq"])
+            for r in self.store.current_file_state()
+            .where(F.col("codebase") == codebase)
+            .select("file_path", "content_hash", "ingest_seq")
+            .collect()
+        }
+
+    def _path_filter(
+        self, df: DataFrame, paths, keep: bool, col: str = "file_path"
+    ) -> DataFrame:
+        """``col`` ∈ paths (keep) / ∉ paths (drop) without embedding an
         unbounded literal list in the Catalyst plan — the measured
         plan-analysis blowup traversal's FRONTIER_ISIN_MAX switch exists
         for (traversal.py:47-50). Small sets stay isin (codegen, no join);
         past the threshold the set becomes a broadcast semi/anti join, so
-        a 10k-changed-file monorepo sync keeps O(1)-size plans.
+        a 10k-changed-file monorepo sync keeps O(1)-size plans. ``col``
+        defaults to file_path; sync also filters names with it.
 
         Null policy (ADVICE r9 — the two branches must agree): a NULL
-        file_path belongs to NO path set, so keep-mode drops it and
-        drop-mode keeps it — exactly the semi/anti-join behavior. The isin
-        branch coalesces its three-valued NULL to false so a null row can't
-        flip outcome with the size of the path set."""
+        value belongs to NO set, so keep-mode drops it and drop-mode keeps
+        it — exactly the semi/anti-join behavior. The isin branch
+        coalesces its three-valued NULL to false so a null row can't flip
+        outcome with the size of the set."""
         paths = list(paths)
         if len(paths) <= 1000:
-            pred = F.coalesce(F.col("file_path").isin(paths), F.lit(False))
+            pred = F.coalesce(F.col(col).isin(paths), F.lit(False))
             return df.where(pred if keep else ~pred)
-        pf = self.spark.createDataFrame([(p,) for p in paths], "file_path string")
-        return df.join(
-            F.broadcast(pf), "file_path", "left_semi" if keep else "left_anti"
-        )
+        pf = self.spark.createDataFrame([(p,) for p in paths], f"{col} string")
+        return df.join(F.broadcast(pf), col, "left_semi" if keep else "left_anti")
 
     # -- mutations (invalidate cache, reference src/query/engine.zig:493-502)
 
@@ -176,18 +228,20 @@ class KausalEngine:
             [(i, rel) for i, (_, rel) in enumerate(files)],
             "file_idx long, file_path string",
         )
-        # ONE lease spans read-base → resolve → append: with
-        # resequence=False the caller owns the sequences, so reading
+        # ONE lease spans read-base → resolve → append → registry write:
+        # with resequence=False the caller owns the sequences, so reading
         # max_sequence() outside the lease would let two engines both
         # read the same base and double-assign a range — exactly the
         # race the storage lease exists to exclude. The lease is
         # reentrant; the appends inside renew it.
         with self.store._writer_lease():
+            epochs = {fp: seq for fp, (_, seq) in self._file_state(codebase).items()}
             base = self.store.max_sequence()
             blocks, edges = ing.resolve_and_build(
-                units, raw_edges, codebase, base, file_index
+                units, raw_edges, codebase, base, file_index, checkpoint=True
             )
-            self.store.append_blocks(blocks, resequence=False)
+            # pin=False: the batch is checkpointed, so deterministic
+            self.store.append_blocks(blocks, resequence=False, pin=False)
             # endpoint-valid BY CONSTRUCTION: resolve_and_build semi-joins
             # both ends against this batch's block ids, and those blocks
             # were appended on the line above — re-checking against a
@@ -202,16 +256,19 @@ class KausalEngine:
                 )
             )
             self._record_refs(codebase, [rel for _, rel in files], raw_edges, base)
-        self._invalidate()
-        counts = self._codebase_counts(codebase)
-        now = int(time.time())
-        reg = self.registry()
-        reg[codebase] = {
-            "path": root, "linked_at": reg.get(codebase, {}).get("linked_at", now),
-            "last_sync_at": now,
-            "block_count": counts["blocks"], "edge_count": counts["edges"],
-        }
-        self._save_registry(reg)
+            epochs.update((rel, base) for _, rel in files)
+            counts = self._written_counts(
+                codebase, self.store.visible(codebase).select("id"), epochs
+            )
+            now = int(time.time())
+            reg = self.registry()
+            reg[codebase] = {
+                "path": root,
+                "linked_at": reg.get(codebase, {}).get("linked_at", now),
+                "last_sync_at": now,
+                "block_count": counts["blocks"], "edge_count": counts["edges"],
+            }
+            self._save_registry(reg)
         return counts
 
     def _record_refs(
@@ -243,232 +300,250 @@ class KausalEngine:
         src/workspace/manager.zig:248-273 — change detection is the
         at-monorepo-scale upgrade its metadata tracking points toward.)
 
-        Resolution scope: re-parsed edges resolve against the changed units
-        PLUS the unchanged files' symbol table reconstructed from the store,
-        so cross-file targets keep resolving codebase-wide; stale edges of
-        re-ingested files are epoch-shadowed (BlockStore.visible_edges).
+        One leased view: the whole sync, from the state diff to the
+        registry write, holds the writer lease, and the codebase's MVCC
+        view ``visible(codebase)`` is persisted ONCE. No other writer can
+        append meanwhile, so that one view serves every read of the old
+        state: the old definitions, the local definitions of candidate
+        files, the tombstone batch, and the unchanged files' symbols and
+        block ids that re-parsed edges resolve against (stale edges of
+        re-ingested files are epoch-shadowed, BlockStore.visible_edges).
+        The returned block/edge counts come from the same view and the
+        checkpointed batch; the view is released when the sync ends.
 
-        Convergence (sync ≡ fresh link, ADVICE r4 #1): changing or removing a
-        DEFINITION can flip how *unchanged* files' bare-name references
-        resolve (e.g. deleting one of two same-named functions makes the
-        other the unique global target). So the affected bare-name set (defs
-        in old versions of changed/removed files ∪ defs in new versions of
-        changed files) is computed first, and every unchanged file whose
-        stored block content mentions one of those names as a token is
-        re-parsed and re-resolved too ("files_reresolved" in the stats). The
-        candidate lookup joins the inverted ``ref_names`` index maintained at
-        every link/sync (change-bounded: affected-names broadcast against an
-        index row per (file, referenced name)); stores predating the index
-        fall back to a token scan of stored block content (corpus-bounded,
-        conservative). Reference semantics:
-        ``src/workspace/manager.zig:113-205``, which re-ingests the whole
-        tree every sync."""
-        reg = self.registry()
-        if root is None:
-            if codebase not in reg:
-                raise ValueError(f"codebase {codebase!r} is not linked")
-            root = reg[codebase]["path"]
-        files = ing.list_files(root)
-        cur = {
-            r["file_path"]: r["content_hash"]
-            for r in ing.file_hashes(self.spark, files).collect()
-        }
-        stored = {
-            r["file_path"]: r["content_hash"]
-            for r in self.store.current_file_state()
-            .where(F.col("codebase") == codebase)
-            .collect()
-        }
-        changed = sorted(rel for rel, h in cur.items() if stored.get(rel) != h)
-        removed = sorted(
-            rel for rel, h in stored.items() if h is not None and rel not in cur
-        )
-        stats = {
-            "files_changed": len(changed), "files_removed": len(removed),
-            "files_unchanged": len(cur) - len(changed),
-        }
-        if not changed and not removed:
-            if codebase in reg:
-                reg[codebase]["last_sync_at"] = int(time.time())
-                self._save_registry(reg)
-            return stats
+        Convergence (sync ≡ fresh link, ADVICE r4 #1): resolution of a bare
+        name reads only the set of unit_ids that define it (a definition in
+        the same file first, else the unique one in the codebase). So an
+        *unchanged* file can rebind only on a name whose set of defining
+        units changed: the affected names are the symmetric difference of
+        the (bare name, unit_id) definitions in the old versions of
+        changed/removed files and in the new versions of changed files.
+        A body-only edit affects no name and re-resolves nothing; adding,
+        removing or moving a definition (deleting one of two same-named
+        functions makes the other the unique global target) affects its
+        name. Every unchanged file that references an affected name and
+        does not define it itself (file-local-first resolution) is
+        re-parsed and re-resolved too ("files_reresolved" in the stats).
+        The candidate lookup reads the inverted ``ref_names`` index
+        maintained at every link/sync (change-bounded: one row per (file,
+        referenced name)); stores predating the index fall back to a token
+        scan of stored block content (corpus-bounded, conservative).
+        Reference semantics: ``src/workspace/manager.zig:113-205``, which
+        re-ingests the whole tree every sync."""
+        with self.store._writer_lease():
+            reg = self.registry()
+            if root is None:
+                if codebase not in reg:
+                    raise ValueError(f"codebase {codebase!r} is not linked")
+                root = reg[codebase]["path"]
+            files = ing.list_files(root)
+            cur = {
+                r["file_path"]: r["content_hash"]
+                for r in ing.file_hashes(self.spark, files).collect()
+            }
+            state = self._file_state(codebase)
+            stored = {rel: h for rel, (h, _) in state.items()}
+            changed = sorted(rel for rel, h in cur.items() if stored.get(rel) != h)
+            removed = sorted(
+                rel for rel, h in stored.items() if h is not None and rel not in cur
+            )
+            stats = {
+                "files_changed": len(changed), "files_removed": len(removed),
+                "files_unchanged": len(cur) - len(changed),
+            }
+            if not changed and not removed:
+                if codebase in reg:
+                    reg[codebase]["last_sync_at"] = int(time.time())
+                    self._save_registry(reg)
+                return stats
 
+            view = self.store.visible(codebase).persist()
+            try:
+                stats.update(self._sync_changes(
+                    codebase, files, cur, state, changed, removed, view
+                ))
+            finally:
+                view.unpersist()
+            now = int(time.time())
+            entry = reg.get(codebase, {"path": root, "linked_at": now})
+            entry.update(
+                {"path": root, "last_sync_at": now,
+                 "block_count": stats["blocks"], "edge_count": stats["edges"]}
+            )
+            reg[codebase] = entry
+            self._save_registry(reg)
+        return stats
+
+    def _sync_changes(
+        self, codebase: str, files: list[tuple[str, str]], cur: dict,
+        state: dict, changed: list[str], removed: list[str], view: DataFrame,
+    ) -> dict[str, int]:
+        """Write one sync's changes; returns files_reresolved, blocks and
+        edges. ``view`` is the codebase's persisted pre-sync MVCC view,
+        taken under the writer lease the caller holds."""
         abs_by_rel = dict((rel, ap) for ap, rel in files)
         affected = changed + removed
-        vis_cb = self.store.visible(codebase)
-
-        # affected bare names: defs in the OLD versions of changed/removed
-        # files (about to be shadowed) ...
-        entity = F.element_at(F.split(F.col("unit_id"), ":"), -1)
-        bare_of_unit = F.element_at(F.split(entity, r"\."), -1)
-        names = {
-            r["bare"]
-            for r in self._path_filter(vis_cb, affected, keep=True)
-            .select(bare_of_unit.alias("bare"))
-            .distinct()
-            .collect()
-        }
-        # ... ∪ defs in the NEW versions of changed files
         units_c = raw_c = None
         if changed:
-            changed_files = [(abs_by_rel[rel], rel) for rel in changed]
             # materialize=True: one combined checkpoint = one parse pass
             units_c, raw_c = ing.parse_files(
-                self.spark, changed_files, materialize=True
+                self.spark, [(abs_by_rel[rel], rel) for rel in changed],
+                materialize=True,
             )
-            names |= {
-                r["bare"]
-                for r in units_c.select(
-                    F.element_at(F.split(F.col("name"), r"\."), -1).alias("bare")
-                )
-                .distinct()
-                .collect()
-            }
-
-        # unchanged files that REFERENCE an affected name must be re-resolved:
-        # their references may now bind to a different target. Candidate
-        # lookup prefers the inverted ref_names index (change-bounded: one
-        # broadcast join against the names set); stores predating the index
-        # fall back to a token scan of stored block content (corpus-bounded,
-        # conservative overapproximation). Coverage = every current file has
-        # its name=NULL sentinel row, so a partially-indexed legacy store
-        # never silently misses candidates.
-        reresolve: list[str] = []
-        if names:
-            names_df = self.spark.createDataFrame(
-                [(n,) for n in sorted(names)], "tok string"
-            )
-            refs = self.store.current_ref_names().where(
-                F.col("codebase") == codebase
-            )
-            n_files_cur = (
-                self.store.current_file_state()
-                .where(
-                    (F.col("codebase") == codebase)
-                    & F.col("content_hash").isNotNull()
-                )
-                .count()
-            )
-            n_covered = refs.where(F.col("name").isNull()).count()
-            if n_covered >= n_files_cur:
-                hits = (
-                    self._path_filter(refs, affected, keep=False)
-                    .join(
-                        F.broadcast(names_df), refs.name == names_df.tok, "left_semi"
-                    )
-                    .select("file_path", F.col("name").alias("tok"))
-                )
-            else:
-                hits = (
-                    self._path_filter(vis_cb, affected, keep=False)
-                    .select(
-                        "file_path",
-                        F.explode(
-                            F.split(F.col("content"), "[^A-Za-z0-9_]+")
-                        ).alias("tok"),
-                    )
-                    .join(F.broadcast(names_df), "tok", "left_semi")
-                )
-            # Local-shadow exclusion (r9): resolution is file-local-FIRST
-            # (resolve_and_build coalesces uid_file before uid_global), so a
-            # file that itself defines bare name n can never change how it
-            # resolves n when OTHER files' defs of n change — re-resolving
-            # it is pure waste. Without this cut, touching any file that
-            # imports `std` cascaded into re-resolving every file in the
-            # codebase (each file references its own std import): the r9
-            # ingest_incremental bench measured 109/110 files re-resolved
-            # for a one-file touch. The anti-join is per (file, name):
-            # a file stays a candidate if ANY affected name it references
-            # is not locally shadowed.
-            local_defs = (
-                self._path_filter(vis_cb, affected, keep=False)
-                .select("file_path", bare_of_unit.alias("tok"))
-                .distinct()
-            )
-            cand = (
-                hits.join(local_defs, ["file_path", "tok"], "left_anti")
-                .select("file_path")
-                .distinct()
-            )
-            reresolve = sorted(
-                r["file_path"]
-                for r in cand.collect()
-                if r["file_path"] in abs_by_rel  # still on disk
-            )
-        stats["files_reresolved"] = len(reresolve)
+        # this first action over the view also fills its cache, before any
+        # write below changes the store
+        names = self._changed_names(view, affected, units_c)
+        epochs = {rel: seq for rel, (h, seq) in state.items() if h is not None}
+        reresolve = (
+            self._rebinding_files(codebase, view, names, affected, epochs, abs_by_rel)
+            if names else []
+        )
 
         touch = changed + reresolve  # files being re-ingested this sync
         shadowed = affected + reresolve
-        # ONE lease spans tombstone → read-base → resolve → append →
-        # file-state (same double-assignment race as link_codebase:
-        # resequence=False means the base read here OWNS a sequence
-        # range, which is only safe while holding the writer lease)
-        with self.store._writer_lease():
-            # tombstone_where takes a Column predicate, so this one site
-            # keeps isin; sync batches are change-bounded and a >1000-file
-            # tombstone sweep should go through unlink/tombstone jobs
-            self.store.tombstone_where(
-                (F.col("codebase") == codebase) & F.col("file_path").isin(shadowed)
-            )
-            base = self.store.max_sequence()
-            if touch:
-                if reresolve:
-                    units_x, raw_x = ing.parse_files(
-                        self.spark,
-                        [(abs_by_rel[rel], rel) for rel in reresolve],
-                        materialize=True,
-                    )
-                    units = units_c.unionByName(units_x) if changed else units_x
-                    raw_edges = raw_c.unionByName(raw_x) if changed else raw_x
-                else:
-                    units, raw_edges = units_c, raw_c
-                file_index = self.spark.createDataFrame(
-                    [(i, rel) for i, rel in enumerate(touch)],
-                    "file_idx long, file_path string",
-                )
-                vis_rest = self._path_filter(
-                    self.store.visible(codebase), shadowed, keep=False
-                )
-                extra_symbols = vis_rest.select(
-                    "file_path",
-                    bare_of_unit.alias("bare"),
-                    "unit_id",
-                )
-                blocks, edges = ing.resolve_and_build(
-                    units, raw_edges, codebase, base, file_index,
-                    extra_symbols=extra_symbols, known_ids=vis_rest.select("id"),
-                )
-                self.store.append_blocks(blocks, resequence=False)
-                # endpoint-valid BY CONSTRUCTION: resolve_and_build semi-joined
-                # both ends against batch blocks ∪ known_ids (vis_rest), and
-                # the batch blocks landed on the line above
-                self.store.append_edges(edges, assume_endpoints_exist=True)
-                self._record_refs(codebase, touch, raw_edges, base)
-            # re-resolved files keep their hash but move to the new epoch so
-            # their superseded edges are shadowed (BlockStore.visible_edges)
-            state_rows = (
-                [(codebase, rel, cur[rel], base) for rel in changed]
-                + [(codebase, rel, None, base) for rel in removed]
-                + [(codebase, rel, cur[rel], base) for rel in reresolve]
-            )
-            self.store.record_file_state(
-                self.spark.createDataFrame(
-                    state_rows,
-                    "codebase string, file_path string, content_hash string,"
-                    " ingest_seq bigint",
-                )
-            )
-        self._invalidate()
-        counts = self._codebase_counts(codebase)
-        now = int(time.time())
-        entry = reg.get(codebase, {"path": root, "linked_at": now})
-        entry.update(
-            {"path": root, "last_sync_at": now,
-             "block_count": counts["blocks"], "edge_count": counts["edges"]}
+        # tombstone_where takes a Column predicate, so this one site keeps
+        # isin; sync batches are change-bounded and a >1000-file tombstone
+        # sweep should go through unlink/tombstone jobs
+        self.store.tombstone_where(
+            (F.col("codebase") == codebase) & F.col("file_path").isin(shadowed),
+            visible=view,
         )
-        reg[codebase] = entry
-        self._save_registry(reg)
-        return {**stats, **counts}
+        base = self.store.max_sequence()
+        vis_rest = self._path_filter(view, shadowed, keep=False)
+        ids = vis_rest.select("id")
+        if touch:
+            if reresolve:
+                units_x, raw_x = ing.parse_files(
+                    self.spark,
+                    [(abs_by_rel[rel], rel) for rel in reresolve],
+                    materialize=True,
+                )
+                units = units_c.unionByName(units_x) if changed else units_x
+                raw_edges = raw_c.unionByName(raw_x) if changed else raw_x
+            else:
+                units, raw_edges = units_c, raw_c
+            file_index = self.spark.createDataFrame(
+                [(i, rel) for i, rel in enumerate(touch)],
+                "file_idx long, file_path string",
+            )
+            extra_symbols = vis_rest.select(
+                "file_path", _bare_of_unit().alias("bare"), "unit_id"
+            )
+            blocks, edges = ing.resolve_and_build(
+                units, raw_edges, codebase, base, file_index,
+                extra_symbols=extra_symbols, known_ids=ids, checkpoint=True,
+            )
+            # pin=False: the batch is checkpointed, so deterministic
+            self.store.append_blocks(blocks, resequence=False, pin=False)
+            # endpoint-valid BY CONSTRUCTION: resolve_and_build semi-joined
+            # both ends against batch blocks ∪ known_ids (vis_rest), and
+            # the batch blocks landed on the line above
+            self.store.append_edges(edges, assume_endpoints_exist=True)
+            self._record_refs(codebase, touch, raw_edges, base)
+            ids = ids.unionByName(blocks.select("id").distinct())
+        # re-resolved files keep their hash but move to the new epoch so
+        # their superseded edges are shadowed (BlockStore.visible_edges)
+        state_rows = (
+            [(codebase, rel, cur[rel], base) for rel in changed]
+            + [(codebase, rel, None, base) for rel in removed]
+            + [(codebase, rel, cur[rel], base) for rel in reresolve]
+        )
+        self.store.record_file_state(
+            self.spark.createDataFrame(
+                state_rows,
+                "codebase string, file_path string, content_hash string,"
+                " ingest_seq bigint",
+            )
+        )
+        epochs_after = {rel: seq for rel, (_, seq) in state.items()}
+        epochs_after.update((rel, base) for rel in shadowed)
+        return {
+            "files_reresolved": len(reresolve),
+            **self._written_counts(codebase, ids, epochs_after),
+        }
+
+    def _changed_names(
+        self, view: DataFrame, affected: list[str], units_c: DataFrame | None
+    ) -> set[str]:
+        """Bare names whose set of defining units a sync changes: the
+        symmetric difference of the (bare, unit_id) definitions in the old
+        versions of the affected files (from ``view``) and in the new
+        versions of the changed files (``units_c``), in one action."""
+        defs = self._path_filter(view, affected, keep=True).select(
+            F.lit(False).alias("new"), _bare_of_unit().alias("bare"), "unit_id"
+        )
+        if units_c is not None:
+            defs = defs.unionByName(units_c.select(
+                F.lit(True).alias("new"),
+                F.element_at(F.split(F.col("name"), r"\."), -1).alias("bare"),
+                F.concat(F.col("file_path"), F.lit(":"), F.col("name")).alias("unit_id"),
+            ))
+        sides: dict[bool, set] = {False: set(), True: set()}
+        for r in defs.collect():
+            sides[r["new"]].add((r["bare"], r["unit_id"]))
+        return {bare for bare, _ in sides[False] ^ sides[True]}
+
+    def _rebinding_files(
+        self, codebase: str, view: DataFrame, names: set[str],
+        affected: list[str], epochs: dict[str, int], on_disk: dict,
+    ) -> list[str]:
+        """Unchanged files still on disk whose references may now bind to
+        a different target: they reference an affected name and do not
+        define it themselves.
+
+        Candidates come from the inverted ref_names index rows at each
+        file's current epoch (``epochs``): the rows of the affected names
+        plus one sentinel per file, with no file_state window. Coverage =
+        every current file has its name=NULL sentinel row; a partially
+        indexed legacy store falls back to a token scan of the stored block
+        content (corpus-bounded, conservative overapproximation), so it
+        never silently misses candidates.
+
+        Local-shadow exclusion (r9): resolution is file-local-FIRST
+        (resolve_and_build coalesces uid_file before uid_global), so a file
+        that itself defines bare name n can never change how it resolves n
+        when OTHER files' defs of n change — re-resolving it is pure waste.
+        Without this cut, touching any file that imports `std` cascaded
+        into re-resolving every file in the codebase (each file references
+        its own std import): the r9 ingest_incremental bench measured
+        109/110 files re-resolved for a one-file touch. The cut is per
+        (file, name): a file stays a candidate if ANY affected name it
+        references is not locally shadowed."""
+        refs = self.store.ref_names().where(F.col("codebase") == codebase)
+        rows = [
+            r for r in refs.where(F.col("name").isNull())
+            .unionByName(self._path_filter(refs, names, keep=True, col="name"))
+            .select("file_path", "name", "ingest_seq")
+            .collect()
+            if epochs.get(r["file_path"]) == r["ingest_seq"]  # current epoch
+        ]
+        skip = set(affected)
+        if len({r["file_path"] for r in rows if r["name"] is None}) >= len(epochs):
+            hits = {
+                (r["file_path"], r["name"]) for r in rows
+                if r["name"] is not None and r["file_path"] not in skip
+            }
+        else:
+            tokens = self._path_filter(view, affected, keep=False).select(
+                "file_path",
+                F.explode(F.split(F.col("content"), "[^A-Za-z0-9_]+")).alias("tok"),
+            )
+            hits = {
+                (r["file_path"], r["tok"])
+                for r in self._path_filter(tokens, names, keep=True, col="tok")
+                .distinct()
+                .collect()
+            }
+        if not hits:
+            return []
+        defs = self._path_filter(
+            view, {fp for fp, _ in hits}, keep=True
+        ).select("file_path", _bare_of_unit().alias("tok"))
+        local = {
+            (r["file_path"], r["tok"])
+            for r in self._path_filter(defs, names, keep=True, col="tok").collect()
+        }
+        return sorted({fp for fp, n in hits - local if fp in on_disk})
 
     def unlink_codebase(self, codebase: str) -> int:
         """Bulk unlink as ONE distributed tombstone job — no block-id list is

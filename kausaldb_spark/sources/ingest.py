@@ -632,6 +632,19 @@ _COMBINED_SCHEMA = StructType(
 )
 
 
+def _paths(
+    spark: SparkSession, files: list[tuple[str, str]] | DataFrame
+) -> DataFrame:
+    """DataFrame[abs_path, file_path] of a driver-side (abs_path, rel_path)
+    list, sliced straight into one task per core (at most one per file) —
+    no repartition shuffle — or a manifest DataFrame's two columns."""
+    if isinstance(files, DataFrame):
+        return files.select("abs_path", "file_path")
+    sc = spark.sparkContext
+    rdd = sc.parallelize(files, max(1, min(len(files), sc.defaultParallelism)))
+    return spark.createDataFrame(rdd, "abs_path string, file_path string")
+
+
 def parse_files(
     spark: SparkSession,
     files: list[tuple[str, str]] | DataFrame,
@@ -658,13 +671,7 @@ def parse_files(
     units and collide sequence ranges). Oversize files become a single
     parse_error marker block."""
 
-    if isinstance(files, DataFrame):
-        paths_df = files.select("abs_path", "file_path")
-    else:
-        n_part = max(1, min(len(files), 32))
-        paths_df = spark.createDataFrame(
-            files, "abs_path string, file_path string"
-        ).repartition(n_part)
+    paths_df = _paths(spark, files)
 
     def _read_capped(ap: str) -> tuple[str | None, str | None]:
         """(source, error) — error set for unreadable or oversize files."""
@@ -717,13 +724,7 @@ def file_hashes(
     an order of magnitude, and unchanged files are never parsed)."""
     import hashlib
 
-    if isinstance(files, DataFrame):
-        paths_df = files.select("abs_path", "file_path")
-    else:
-        n_part = max(1, min(len(files), 32)) if files else 1
-        paths_df = spark.createDataFrame(
-            files, "abs_path string, file_path string"
-        ).repartition(n_part)
+    paths_df = _paths(spark, files)
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -749,6 +750,7 @@ def resolve_and_build(
     file_index: DataFrame | None = None,
     extra_symbols: DataFrame | None = None,
     known_ids: DataFrame | None = None,
+    checkpoint: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Semantic resolution + ContextBlock/GraphEdge materialization.
 
@@ -775,6 +777,11 @@ def resolve_and_build(
     *across* batches, which ``sequence_base`` provides. The stride cannot
     collide: a MAX_FILE_SIZE (1 MiB) file yields < 1M units (every unit
     spans at least one source line).
+
+    ``checkpoint=True`` evaluates the block batch once, eagerly
+    (localCheckpoint): the caller's block write, the edges' endpoint check
+    and any count over the batch then read that one evaluation instead of
+    re-running the per-file window each.
     """
     from pyspark.sql.window import Window
 
@@ -785,7 +792,7 @@ def resolve_and_build(
         file_index = units.sparkSession.createDataFrame(
             list(enumerate(paths)), "file_idx long, file_path string"
         )
-    units = units.join(F.broadcast(file_index), "file_path")
+    indexed = units.join(F.broadcast(file_index), "file_path")
 
     uid = F.concat(F.col("file_path"), F.lit(":"), F.col("name"))
     in_file = F.row_number().over(
@@ -800,7 +807,7 @@ def resolve_and_build(
             F.lit('"'),
         ),
     ).otherwise(F.lit(""))
-    blocks = units.select(
+    blocks = indexed.select(
         F.md5(F.concat(F.lit(codebase), F.lit("/"), uid)).alias("id"),
         seq.cast("bigint").alias("sequence"),
         F.concat(
@@ -821,24 +828,31 @@ def resolve_and_build(
         ).alias("metadata_json"),
         "content",
     )
+    if checkpoint:
+        blocks = blocks.localCheckpoint()
 
-    # symbol table: bare name → qualified unit, per file and global
-    syms = units.select(
+    # symbol table: bare name → qualified unit, per file and global. The
+    # per-file table needs only the batch's own files (every raw edge
+    # comes from one of them); the global one sees the whole codebase.
+    batch_syms = units.select(
         "file_path",
         F.element_at(F.split(F.col("name"), r"\."), -1).alias("bare"),
         F.concat(F.col("file_path"), F.lit(":"), F.col("name")).alias("unit_id"),
     )
+    syms = batch_syms
     if extra_symbols is not None:
         syms = syms.unionByName(
             extra_symbols.select("file_path", "bare", "unit_id")
         )
-    per_file = syms.groupBy("file_path", "bare").agg(
+    per_file = batch_syms.groupBy("file_path", "bare").agg(
         F.min("unit_id").alias("uid_file")
     )
+    # unique <=> min == max: one aggregation, where a distinct count
+    # would add a second shuffle
     global_unique = (
         syms.groupBy("bare")
-        .agg(F.countDistinct("unit_id").alias("n"), F.min("unit_id").alias("uid_global"))
-        .where(F.col("n") == 1)
+        .agg(F.min("unit_id").alias("uid_global"), F.max("unit_id").alias("_hi"))
+        .where(F.col("uid_global") == F.col("_hi"))
         .select("bare", "uid_global")
     )
 

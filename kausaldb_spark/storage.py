@@ -65,7 +65,19 @@ _EMPTY_FILE_STATE = (
 _EMPTY_REF_NAMES = (
     "codebase string, file_path string, name string, ingest_seq bigint"
 )
-_EDGE_COLS = ("src", "dst", "edge_type", "codebase", "src_file", "ingest_seq")
+# Declared table schemas: every read is pinned to one (no schema-inference
+# job per read). ``codebase`` is the blocks table's partition column and
+# therefore last, where a partitioned parquet read puts it.
+_BLOCKS = (
+    "id string, sequence bigint, source_uri string, unit_type string,"
+    " unit_id string, file_path string, metadata_json string,"
+    " content string, codebase string"
+)
+_EDGES = (
+    "src string, dst string, edge_type string, codebase string,"
+    " src_file string, ingest_seq bigint"
+)
+_EDGE_COLS = tuple(f.split()[0] for f in _EDGES.split(","))
 
 # Session-level MVCC snapshot cache: (session id, store path, high-water
 # mark) → persisted visible() frame. Valid because every block/tombstone
@@ -346,46 +358,40 @@ class BlockStore:
                 return True
         return False
 
-    def _read_or_empty(self, d: str, schema_of: DataFrame | str) -> DataFrame:
-        """Empty frame ONLY when the table genuinely holds no data yet — the
-        directory is absent, or a write of an empty frame left it without
-        data files. Any failure while data files ARE present (corruption,
-        permissions) re-raises: silently treating a broken store as empty
-        would reset sequences and let compact() overwrite real data with
-        nothing. (On an object store the walk becomes a prefix listing.)"""
+    def _read_or_empty(self, d: str, schema: str) -> DataFrame:
+        """The table at ``d`` read with its declared ``schema`` — no
+        inference job, and files written before a column existed read it as
+        NULL. A table whose directory does not exist yet is answered from
+        the schema alone, without touching Spark. Empty ONLY when the table
+        genuinely holds no data: any read failure while data files ARE
+        present (corruption, permissions) re-raises, at the read or at the
+        first action — silently treating a broken store as empty would
+        reset sequences and let compact() overwrite real data with nothing.
+        (On an object store the walk becomes a prefix listing.)"""
+        if not os.path.isdir(d):
+            return self._empty(schema)
         try:
-            return self.spark.read.parquet(d)
+            return self.spark.read.schema(schema).parquet(d)
         except AnalysisException:
             if self._dir_has_data(d):
                 raise
-            if isinstance(schema_of, str):
-                return self.spark.createDataFrame([], schema_of)
-            return schema_of.limit(0)
+            return self._empty(schema)
+
+    def _empty(self, schema: str) -> DataFrame:
+        """An empty frame the optimizer knows is empty (``limit(0)`` folds
+        to an empty local relation), so joins and aggregations over an
+        absent table fold away instead of running tasks."""
+        return self.spark.createDataFrame([], schema).limit(0)
 
     def blocks_raw(self) -> DataFrame:
-        return self._read_or_empty(
-            self._blocks_dir,
-            "id string, sequence bigint, source_uri string, unit_type string,"
-            " unit_id string, codebase string, file_path string,"
-            " metadata_json string, content string",
-        )
+        return self._read_or_empty(self._blocks_dir, _BLOCKS)
 
     def edges(self) -> DataFrame:
         """Edge rows with provenance: (src, dst, edge_type, codebase,
-        src_file, ingest_seq). Provenance is NULL/0 for edges appended via
-        the plain API (they are then never epoch-shadowed)."""
-        e = self._read_or_empty(
-            self._edges_dir,
-            "src string, dst string, edge_type string, codebase string,"
-            " src_file string, ingest_seq bigint",
-        )
-        # stores written before provenance existed lack the extra columns
-        for name, typ in (
-            ("codebase", "string"), ("src_file", "string"), ("ingest_seq", "bigint")
-        ):
-            if name not in e.columns:
-                e = e.withColumn(name, F.lit(None).cast(typ))
-        return e
+        src_file, ingest_seq). Provenance is NULL for edges appended via
+        the plain API or before it existed (they are then never
+        epoch-shadowed)."""
+        return self._read_or_empty(self._edges_dir, _EDGES)
 
     def tombstones(self) -> DataFrame:
         return self._read_or_empty(self._tomb_dir, _EMPTY_TOMB)
@@ -603,7 +609,9 @@ class BlockStore:
             )
             tomb.write.mode("append").parquet(self._tomb_dir)
 
-    def tombstone_where(self, predicate: Column | str) -> None:
+    def tombstone_where(
+        self, predicate: Column | str, visible: DataFrame | None = None
+    ) -> None:
         """S3 at scale: tombstone every *visible* block matching a predicate
         as one distributed job — no id list ever touches the driver
         (reference bulk delete: ``src/storage/engine.zig:1132-1174``).
@@ -611,14 +619,20 @@ class BlockStore:
         All tombstones in the batch share one fresh sequence above the
         current high-water mark; shadowing only needs tombstone.sequence >=
         the shadowed version's sequence, and a later re-put claims a higher
-        sequence, so resurrection semantics are unchanged."""
+        sequence, so resurrection semantics are unchanged.
+
+        ``visible`` is a persisted snapshot the caller took under the
+        writer lease it still holds (sync's codebase view), so it equals
+        :meth:`visible` here; the batch is drawn from it instead of
+        re-deriving the MVCC view. Such a batch is change-bounded and is
+        written as one file, not one per snapshot partition."""
         with self._writer_lease():
             seq = self.max_sequence() + 1
             self._write_hwm(seq)  # reserve-then-write (see append_blocks)
             self._invalidate_snapshot()
             self._lease_renew()  # the visible() scan below can be long
             tomb = (
-                self.visible()
+                (self.visible() if visible is None else visible)
                 .where(predicate)
                 .select(
                     F.col("id").alias("block_id"),
@@ -626,6 +640,8 @@ class BlockStore:
                     F.lit(seq * 1000).cast("bigint").alias("deletion_timestamp"),
                 )
             )
+            if visible is not None:
+                tomb = tomb.coalesce(1)
             tomb.write.mode("append").parquet(self._tomb_dir)
 
     def tombstone_codebase(self, codebase: str) -> None:

@@ -18,9 +18,9 @@ from pyspark.sql import functions as F
 from kausaldb_spark.engine import REGISTRY_BLOCK_ID, KausalEngine
 from kausaldb_spark.storage import BlockStore
 
-# r13: heavy gauntlet — opt-in via `-m scale` (see pytest.ini); the
-# default driver verify run keeps the unit + oracle-parity suites
-pytestmark = pytest.mark.scale
+# Heavy tests are opt-in via `-m scale` (see pytest.ini), marked one by
+# one: the default run keeps the sync convergence, incremental-sync,
+# local-shadowing and job-count tests, so sync_codebase has tier-1 coverage.
 
 A_PY = textwrap.dedent('''
     def fa():
@@ -128,6 +128,7 @@ def test_incremental_sync(spark, proj, tmp_path_factory):
     assert eng.store.blocks_raw().count() == raw3 + 1  # registry stamp only
 
 
+@pytest.mark.scale
 def test_sync_survives_compact(spark, proj, tmp_path_factory):
     """Compaction folds epoch history; a post-compact sync still detects
     changes against the compacted file_state."""
@@ -141,6 +142,7 @@ def test_sync_survives_compact(spark, proj, tmp_path_factory):
     assert len(_edges_from(eng, "b.py")) == 1
 
 
+@pytest.mark.scale
 def test_workspace_registry(spark, proj, tmp_path_factory):
     store = str(tmp_path_factory.mktemp("reg_store"))
     eng = KausalEngine(spark, store)
@@ -168,6 +170,7 @@ def test_workspace_registry(spark, proj, tmp_path_factory):
     assert eng.store.visible().where(F.col("codebase") == "two").count() == n_vis
 
 
+@pytest.mark.scale
 def test_max_sequence_high_water_mark(spark, tmp_path_factory):
     """The HWM side-file tracks the scan-derived max through append /
     delete / tombstone / compact, and append no longer rescans the store."""
@@ -260,7 +263,11 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
             (root / name).unlink()
         else:
             (root / name).write_text(body)
-        eng.sync_codebase("cb")
+        stats = eng.sync_codebase("cb")
+        # the counts a sync derives from its own relations agree with a
+        # recount over the whole store
+        counts = eng._codebase_counts("cb")
+        assert {k: stats[k] for k in counts} == counts, (i, stats, counts)
 
         # fresh link of the current tree into a pristine store
         fresh_store = str(tmp_path_factory.mktemp(f"conv_fresh{i}"))
@@ -276,6 +283,73 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         shutil.rmtree(fresh_store, ignore_errors=True)
 
 
+# Spark jobs a one-file body-edit sync of the `proj` tree may start: this
+# code runs 47 (4 and 8 cores alike); the ceiling leaves a little room for
+# the planner's runtime choices. Before the sync shared one leased codebase
+# view and an exact affected-name set and read tables with pinned schemas,
+# the same sync ran 98.
+SYNC_JOB_CEILING = 50
+
+
+def test_body_edit_sync_job_ceiling(spark, proj, tmp_path_factory):
+    """A body-only edit changes no definition, so the sync re-resolves no
+    unchanged file; its Spark jobs, counted under a job group, stay under
+    the ceiling, and the counts it returns match a whole-store recount."""
+    store = str(tmp_path_factory.mktemp("jobs_store"))
+    eng = KausalEngine(spark, store)
+    eng.link_codebase(str(proj), "cb")
+    (proj / "b.py").write_text(B_PY_V2)
+
+    sc = spark.sparkContext
+    group = f"body-edit-sync-{id(eng)}"
+    sc.setJobGroup(group, "one-file body-edit sync")
+    try:
+        stats = eng.sync_codebase("cb")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert stats["files_changed"] == 1 and stats["files_reresolved"] == 0, stats
+    assert jobs <= SYNC_JOB_CEILING, jobs
+    counts = eng._codebase_counts("cb")
+    assert {k: stats[k] for k in counts} == counts
+
+
+def test_fresh_store_reads_start_no_spark_jobs(spark, tmp_path_factory):
+    """A table whose directory does not exist yet is answered from its
+    declared schema: reading every table of a fresh store, and the MVCC
+    views over them, starts no Spark job. Once written, a table reads with
+    the same columns in the same order (codebase last in blocks)."""
+    st = BlockStore(spark, str(tmp_path_factory.mktemp("fresh_reads")))
+    sc = spark.sparkContext
+    group = f"fresh-store-reads-{id(st)}"
+    sc.setJobGroup(group, "fresh store reads")
+    try:
+        for df in (
+            st.blocks_raw(), st.edges(), st.tombstones(), st.file_state(),
+            st.ref_names(), st.visible(), st.visible("cb"),
+            st.current_file_state(), st.current_ref_names(),
+        ):
+            assert df.collect() == []
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    empty = st.blocks_raw().dtypes
+    assert empty[-1] == ("codebase", "string")
+    st.append_blocks(spark.createDataFrame(
+        [("b1", 1, "file://x", "function", "x.py:f", "cb", "x.py", "{}", "f")],
+        "id string, sequence bigint, source_uri string, unit_type string,"
+        " unit_id string, codebase string, file_path string,"
+        " metadata_json string, content string",
+    ))
+    assert st.blocks_raw().dtypes == empty
+    assert [r["id"] for r in st.visible("cb").collect()] == ["b1"]
+
+
+@pytest.mark.scale
 def test_sync_reresolves_unchanged_callers(spark, tmp_path_factory):
     """ADVICE r4 #1: editing/removing one of two same-named definitions must
     re-resolve the *unchanged* files that reference the name — incremental
@@ -316,6 +390,7 @@ def test_sync_reresolves_unchanged_callers(spark, tmp_path_factory):
     assert caller_targets() == []
 
 
+@pytest.mark.scale
 def test_ref_index_drives_reresolution(spark, tmp_path_factory):
     """The inverted ref_names index must (a) be fully covered after a fresh
     link (sentinel per file), (b) drive the same re-resolution outcome as
@@ -356,6 +431,7 @@ def test_ref_index_drives_reresolution(spark, tmp_path_factory):
     }
 
 
+@pytest.mark.scale
 def test_legacy_store_falls_back_to_content_scan(spark, tmp_path_factory):
     """A store written before ref_names existed (simulated by dropping the
     index dir) must still re-resolve via the content-scan fallback — never
@@ -388,7 +464,9 @@ def test_locally_shadowed_references_skip_the_reresolve_cascade(spark, tmp_path_
     cascade. Without the cut, touching any file sharing a ubiquitous local
     name (every Zig file's `std` import) re-resolved the whole codebase:
     the r9 ingest bench measured 109/110 files re-resolved per one-file
-    touch. A file referencing the name WITHOUT a local def still rebinds."""
+    touch. A file referencing the name WITHOUT a local def still rebinds,
+    and only when the set of units defining the name changes: a body-only
+    edit re-resolves nothing."""
     root = tmp_path_factory.mktemp("shadow")
     # every file defines its own `helper` (the std-import pattern) ...
     (root / "a.py").write_text(
@@ -405,20 +483,25 @@ def test_locally_shadowed_references_skip_the_reresolve_cascade(spark, tmp_path_
     eng = KausalEngine(spark, store)
     eng.link_codebase(str(root), "cb")
 
-    # touch d.py: its def `lonely` is an affected name; c.py references it
-    # unshadowed -> re-resolves. a.py/b.py reference only their OWN helper
-    # -> must stay out of the cascade even though `helper` appears in the
-    # affected set when b.py is later touched.
+    # body-only touch of d.py: the set of units defining `lonely` is the
+    # same, so no unchanged file can rebind and none is re-resolved
     (root / "d.py").write_text("def lonely():\n    return 33\n")
+    stats = eng.sync_codebase("cb")
+    assert stats["files_changed"] == 1
+    assert stats["files_reresolved"] == 0, stats
+
+    # a second definition of `lonely` changes that set: c.py references the
+    # name without defining it, so it must rebind (the name is now
+    # ambiguous) — exactly c.py is re-resolved
+    (root / "e.py").write_text("def lonely():\n    return 4\n")
     stats = eng.sync_codebase("cb")
     assert stats["files_changed"] == 1
     assert stats["files_reresolved"] == 1, stats  # exactly c.py
 
-    # touch b.py (defines `helper`): a.py's helper reference is locally
-    # shadowed -> zero files re-resolved
-    (root / "b.py").write_text(
-        "def helper():\n    return 22\n\ndef run_b():\n    return helper()\n"
-    )
+    # b.py loses its own `helper`: a.py references `helper` too, but
+    # defines it locally -> shadowed, zero files re-resolved (b.py itself
+    # is re-parsed as changed and now binds a.py's helper)
+    (root / "b.py").write_text("def run_b():\n    return helper()\n")
     stats = eng.sync_codebase("cb")
     assert stats["files_changed"] == 1
     assert stats["files_reresolved"] == 0, stats
@@ -442,6 +525,7 @@ def test_locally_shadowed_references_skip_the_reresolve_cascade(spark, tmp_path_
     assert edge_set(eng) == edge_set(eng2)
 
 
+@pytest.mark.scale
 def test_link_and_sync_read_base_under_the_writer_lease(spark, proj, tmp_path_factory):
     """resequence=False means link/sync OWN the sequence range derived from
     max_sequence() — two engines reading the same base outside the lease
@@ -473,6 +557,7 @@ def test_link_and_sync_read_base_under_the_writer_lease(spark, proj, tmp_path_fa
         ing_mod.resolve_and_build = orig
 
 
+@pytest.mark.scale
 def test_cache_hit_counts_as_a_served_query(spark, proj, tmp_path_factory):
     """X4 parity: the reference counts every query; a cache hit must land
     in the per-type counters, not only in cache_hits."""
@@ -485,6 +570,7 @@ def test_cache_hit_counts_as_a_served_query(spark, proj, tmp_path_factory):
     assert eng.stats.queries_by_type["find_by_name"] == 2
 
 
+@pytest.mark.scale
 def test_status_edges_agree_with_visible_after_sync(spark, proj, tmp_path_factory):
     """status() must report the VISIBLE edge relation: after a sync the
     old epochs' edge rows remain in parquet but are shadowed."""
@@ -499,6 +585,7 @@ def test_status_edges_agree_with_visible_after_sync(spark, proj, tmp_path_factor
     assert eng.store.edges().count() > st["edges"]
 
 
+@pytest.mark.scale
 def test_noop_sync_invalidates_result_cache(spark, proj, tmp_path_factory):
     """A zero-change sync still rewrites the registry block (a store
     mutation): cached results must drop so the next read sees the new
@@ -512,6 +599,7 @@ def test_noop_sync_invalidates_result_cache(spark, proj, tmp_path_factory):
     assert len(eng._cache) == 0
 
 
+@pytest.mark.scale
 def test_path_filter_null_semantics_agree_across_threshold(spark, tmp_path_factory):
     """ADVICE r9: _path_filter's isin branch (<=1000 paths) and its
     semi/anti-join branch (>1000) must return the SAME rows for a NULL
