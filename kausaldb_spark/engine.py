@@ -26,6 +26,7 @@ from kausaldb_spark.operators import context as cx
 from kausaldb_spark.operators import filtering as flt
 from kausaldb_spark.operators import lookup as lk
 from kausaldb_spark.operators import traversal as tv
+from kausaldb_spark.session import local_frame
 from kausaldb_spark.sources import ingest as ing
 from kausaldb_spark.storage import BlockStore
 
@@ -41,6 +42,14 @@ _PENDING_OBS_MAX = 256
 # wins gives registry updates for free.
 REGISTRY_BLOCK_ID = "1" * 32
 REGISTRY_CODEBASE = "__workspace__"
+
+# the columns of a traversal answer (traverse, find_callers/callees/
+# references); a name with no anchor answers an empty frame of this schema
+_TRAVERSE_COLS = (
+    ("id", "string"), ("depth", "int"), ("unit_type", "string"),
+    ("unit_id", "string"), ("codebase", "string"), ("source_uri", "string"),
+    ("content", "string"),
+)
 
 
 def _bare_of_unit():
@@ -110,8 +119,8 @@ class KausalEngine:
 
     def _save_registry(self, reg: dict[str, dict]) -> None:
         content = json.dumps({"version": 1, "codebases": reg}, sort_keys=True)
-        block = self.spark.createDataFrame(
-            [(
+        block = local_frame(
+            self.spark, [(
                 REGISTRY_BLOCK_ID, 0, "workspace://metadata", "workspace_config",
                 "workspace://metadata", REGISTRY_CODEBASE, "",
                 '{"type":"workspace_config"}', content,
@@ -160,8 +169,8 @@ class KausalEngine:
         BlockStore.visible_edges' rules for the edges ingestion writes,
         which always join two blocks of one codebase. On such a codebase
         this equals :meth:`_codebase_counts`."""
-        st = self.spark.createDataFrame(
-            sorted(epochs.items()), "_fp string, _epoch bigint"
+        st = local_frame(
+            self.spark, sorted(epochs.items()), "_fp string, _epoch bigint"
         )
         e = self.store.edges()
         e = (
@@ -208,7 +217,7 @@ class KausalEngine:
         if len(paths) <= 1000:
             pred = F.coalesce(F.col(col).isin(paths), F.lit(False))
             return df.where(pred if keep else ~pred)
-        pf = self.spark.createDataFrame([(p,) for p in paths], f"{col} string")
+        pf = local_frame(self.spark, [(p,) for p in paths], f"{col} string")
         return df.join(F.broadcast(pf), col, "left_semi" if keep else "left_anti")
 
     # -- mutations (invalidate cache, reference src/query/engine.zig:493-502)
@@ -224,8 +233,8 @@ class KausalEngine:
         # projections of it (the previous shape checkpointed units and edges
         # separately, which ran the full file parse twice)
         units, raw_edges = ing.parse_files(self.spark, files, materialize=True)
-        file_index = self.spark.createDataFrame(
-            [(i, rel) for i, (_, rel) in enumerate(files)],
+        file_index = local_frame(
+            self.spark, [(i, rel) for i, (_, rel) in enumerate(files)],
             "file_idx long, file_path string",
         )
         # ONE lease spans read-base → resolve → append → registry write:
@@ -280,8 +289,8 @@ class KausalEngine:
         references nothing is still indexed). Sync's which-files-must-
         re-resolve lookup then joins this index instead of token-scanning
         every stored block's content."""
-        sent = self.spark.createDataFrame(
-            [(codebase, rel, None, base) for rel in rel_paths],
+        sent = local_frame(
+            self.spark, [(codebase, rel, None, base) for rel in rel_paths],
             "codebase string, file_path string, name string, ingest_seq bigint",
         )
         refs = raw_edges.select(
@@ -422,8 +431,8 @@ class KausalEngine:
                 raw_edges = raw_c.unionByName(raw_x) if changed else raw_x
             else:
                 units, raw_edges = units_c, raw_c
-            file_index = self.spark.createDataFrame(
-                [(i, rel) for i, rel in enumerate(touch)],
+            file_index = local_frame(
+                self.spark, [(i, rel) for i, rel in enumerate(touch)],
                 "file_idx long, file_path string",
             )
             extra_symbols = vis_rest.select(
@@ -449,8 +458,8 @@ class KausalEngine:
             + [(codebase, rel, cur[rel], base) for rel in reresolve]
         )
         self.store.record_file_state(
-            self.spark.createDataFrame(
-                state_rows,
+            local_frame(
+                self.spark, state_rows,
                 "codebase string, file_path string, content_hash string,"
                 " ingest_seq bigint",
             )
@@ -593,6 +602,8 @@ class KausalEngine:
         return df
 
     def find_block(self, block_id: str) -> DataFrame:
+        # visible(), not snapshot(): an id predicate commutes with the MVCC
+        # aggregate and reaches the parquet scan as a pushed filter
         return self._timed(
             "find_block", None, lambda: lk.find_block(self.store.visible(), block_id)
         )
@@ -601,21 +612,21 @@ class KausalEngine:
         return self._timed(
             "find_by_name",
             ("find_by_name", workspace, unit_type, name),
-            lambda: lk.find_by_name(self.store.visible(workspace), workspace, unit_type, name),
+            lambda: lk.find_by_name(self.store.snapshot(), workspace, unit_type, name),
         )
 
     def find_by_file_path(self, workspace: str, file_path: str) -> DataFrame:
         return self._timed(
             "find_by_file_path",
             ("find_by_file_path", workspace, file_path),
-            lambda: lk.find_by_file_path(self.store.visible(workspace), workspace, file_path),
+            lambda: lk.find_by_file_path(self.store.snapshot(), workspace, file_path),
         )
 
     def keyword_search(self, query: str, threshold: float = 0.7, max_results: int = 500) -> DataFrame:
         return self._timed(
             "keyword_search",
             ("keyword_search", query, threshold, max_results),
-            lambda: lk.keyword_search(self.store.visible(), query, threshold, max_results),
+            lambda: lk.keyword_search(self.store.snapshot(), query, threshold, max_results),
         )
 
     def ranked_search(self, terms: list[str], k: int = 20) -> DataFrame:
@@ -628,7 +639,7 @@ class KausalEngine:
         from kausaldb_spark.functions.text import term_match_topk
 
         def build():
-            vis = self.store.visible()
+            vis = self.store.snapshot()
             top = term_match_topk(
                 vis, list(terms), k=k, text_col="content", id_col="id"
             ).withColumnRenamed("doc_id", "id")
@@ -649,22 +660,23 @@ class KausalEngine:
         """F1-F5. ``with_stats=True`` instruments the query with observe()
         counters: rows_scanned = visible blocks examined (the reference's
         blocks_scanned — its filter loop walks every visible block,
-        src/query/filtering.zig:199-296), rows_matched = rows out. The
-        scan-side CollectMetrics pins the count ABOVE the parquet scan, so
-        predicate pushdown is traded for the exact scan count — which is
-        precisely the reference's own cost model; the default path keeps
-        pushdown and skips the counters. Counters land in stats/status()
-        after the caller runs an action (observe adds no extra job)."""
+        src/query/filtering.zig:199-296), rows_matched = rows out. Both
+        paths scan the persisted snapshot (BlockStore.snapshot: a filter
+        predicate cannot pass the MVCC aggregate, so parquet pushdown buys
+        nothing); the scan-side count is taken above that scan, which is
+        precisely the reference's own cost model. Counters land in
+        stats/status() after the caller runs an action (observe adds no
+        extra job)."""
         if not with_stats:
             return self._timed(
                 "filtered", None,
-                lambda: flt.filtered_query(self.store.visible(), expr, offset, max_results),
+                lambda: flt.filtered_query(self.store.snapshot(), expr, offset, max_results),
             )
         from pyspark.sql import Observation
 
         def build():
             o_scan, o_match = Observation(), Observation()
-            vis = self.store.visible().observe(
+            vis = self.store.snapshot().observe(
                 o_scan, F.count(F.lit(1)).alias("rows_scanned")
             )
             out = flt.filtered_query(vis, expr, offset, max_results).observe(
@@ -707,9 +719,7 @@ class KausalEngine:
             out = reached.join(self.store.snapshot(), "id")
             if workspace:
                 out = out.where(out.codebase == workspace)
-            out = out.select(
-                "id", "depth", "unit_type", "unit_id", "codebase", "source_uri", "content"
-            )
+            out = out.select(*(c for c, _ in _TRAVERSE_COLS))
             if with_stats:
                 from pyspark.sql import Observation
 
@@ -724,12 +734,21 @@ class KausalEngine:
         )
         return self._timed("traverse", key, build)
 
+    def _no_anchor(self) -> DataFrame:
+        """The answer to a callers/callees/references request whose name
+        has no anchor: no rows, the columns of :meth:`traverse`, no plan
+        over the store. A zero limit plans as an empty local relation, so
+        reading it starts no Spark job."""
+        return self.spark.range(1).select(
+            *(F.lit(None).cast(t).alias(c) for c, t in _TRAVERSE_COLS)
+        ).limit(0)
+
     def find_callers(self, workspace: str, name: str, max_depth: int = 1) -> DataFrame:
         anchors = [
             r["id"] for r in self.find_by_name(workspace, "function", name).collect()
         ] or [r["id"] for r in self.find_by_name(workspace, "type", name).collect()]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.INCOMING, tv.EdgeFilter.include("calls", "calls_method"),
             max_depth, workspace=workspace,
@@ -740,7 +759,7 @@ class KausalEngine:
             r["id"] for r in self.find_by_name(workspace, "function", name).collect()
         ]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.OUTGOING, tv.EdgeFilter.include("calls", "calls_method"),
             max_depth, workspace=workspace,
@@ -753,7 +772,7 @@ class KausalEngine:
         for ut in ("function", "type", "const"):
             anchors += [r["id"] for r in self.find_by_name(workspace, ut, name).collect()]
         if not anchors:
-            return self.store.visible().limit(0)
+            return self._no_anchor()
         return self.traverse(
             anchors, tv.BIDIRECTIONAL,
             tv.EdgeFilter.include("references", "imports", "depends_on"),
@@ -825,11 +844,11 @@ class KausalEngine:
     def status(self) -> dict:
         self._drain_observations()
         return {
-            "blocks_visible": self.store.visible().count(),
-            # visible_edges, not raw edges(): epoch-shadowed and dangling
-            # edge rows are invisible to every query and to the registry's
-            # edge_count — status must agree with what queries see
-            "edges": self.store.visible_edges().count(),
+            "blocks_visible": self.store.snapshot().count(),
+            # the visible_edges view, not raw edges(): epoch-shadowed and
+            # dangling edge rows are invisible to every query and to the
+            # registry's edge_count — status must agree with what queries see
+            "edges": self.store.edges_snapshot().count(),
             "tombstones": self.store.tombstones().count(),
             "max_sequence": self.store.max_sequence(),
             "codebases": self.registry(),

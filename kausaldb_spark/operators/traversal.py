@@ -32,6 +32,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from kausaldb_spark.session import local_frame
 
 OUTGOING = "outgoing"
 INCOMING = "incoming"
@@ -48,6 +51,11 @@ TOPO_COLLECT_EDGE_CAP = 500_000
 # frontier becomes a broadcast semi-join so the plan never grows with the
 # frontier (the 10k-literal worst case re-ships the list every level)
 FRONTIER_ISIN_MAX = 1_000
+# find_paths_between holds a level's paths on the driver up to this many;
+# a larger level continues as a distributed join
+PATH_FRONTIER_CAP = MAX_RESULTS_LIMIT
+# find_paths_between's answer: '->'-joined ids and the path's edge count
+_PATH_SCHEMA = "path string, depth int"
 
 
 @dataclass(frozen=True)
@@ -108,26 +116,19 @@ def _id_type(adj: DataFrame):
     return adj.schema["src"].dataType
 
 
-def _ids_to_frame(spark, rows: list[tuple], id_type) -> DataFrame:
-    """DataFrame[id, depth] from driver-side (cap-bounded) rows. Arrow-backed
-    createDataFrame beats a literal-array build at every size — hundreds of
-    struct literals stall Catalyst analysis for seconds (measured)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+def _fields(*pairs) -> StructType:
+    return StructType([StructField(n, t) for n, t in pairs])
 
-    schema = StructType(
-        [StructField("id", id_type), StructField("depth", IntegerType())]
-    )
-    return spark.createDataFrame(rows, schema)
+
+def _ids_to_frame(spark, rows: list[tuple], id_type) -> DataFrame:
+    """DataFrame[id, depth] from driver-side (cap-bounded) rows."""
+    return local_frame(spark, rows, _fields(("id", id_type), ("depth", IntegerType())))
 
 
 def _frontier_frame(spark, ids: list, id_type, name: str = "src") -> DataFrame:
     """One-column frame of frontier ids for a broadcast semi-join — unlike a
     10k-literal ``isin``, the plan does not grow with the frontier."""
-    from pyspark.sql.types import StructField, StructType
-
-    return spark.createDataFrame(
-        [(i,) for i in ids], StructType([StructField(name, id_type)])
-    )
+    return local_frame(spark, [(i,) for i in ids], _fields((name, id_type)))
 
 
 def _restrict_to_frontier(adj: DataFrame, frontier: list, id_type) -> DataFrame:
@@ -369,16 +370,9 @@ def dfs_preorder(
                     stack.append((nxt, d + 1))
     rows = [(i, first_order[i], best[i]) for i in first_order]
     rows.sort(key=lambda r: r[1])
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("id", idt),
-            StructField("visit_order", IntegerType()),
-            StructField("depth", IntegerType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, _fields(
+        ("id", idt), ("visit_order", IntegerType()), ("depth", IntegerType())
+    ))
 
 
 def weakly_connected_components(
@@ -641,6 +635,12 @@ def find_paths_between(
     substring containment test is an exact membership test (used for the
     simple-path constraint) — the same trick keeps the DuckDB oracle a plain
     recursive CTE.
+
+    Execution follows bfs: while a level holds at most PATH_FRONTIER_CAP
+    paths, the frontier lives on the driver and a level is ONE successor
+    lookup (_restrict_to_frontier, for the path ends not looked up at an
+    earlier level) plus a Python extension of the paths. A larger level
+    continues as a distributed join, one action per level.
     """
     max_depth = min(max_depth, MAX_DEPTH_LIMIT)
     # the reference's hard 100-path cap binds whatever the caller asks for
@@ -649,28 +649,98 @@ def find_paths_between(
     max_paths = min(max_paths, MAX_PATHS)
     adj = orient(edges, direction, edge_filter)
     spark = edges.sparkSession
+    idt = _id_type(adj)
 
-    frontier = spark.range(1).select(
-        F.lit(start_id).alias("path"), F.lit(start_id).alias("last")
-    )
-    done = frontier.where(F.col("last") == F.lit(target_id)).select(
-        "path", F.lit(0).cast("int").alias("depth")
-    )
-    n_done = done.count()
-
-    for d in range(1, max_depth + 1):
-        # shortest-first early exit: levels complete in depth order, so
-        # once a finished level holds >= max_paths paths every deeper path
-        # sorts after the ones already in hand — expanding further levels
-        # (the frontier grows exponentially on branchy graphs) could never
-        # change the returned set
-        if n_done >= max_paths:
+    start = str(start_id)
+    # (path, last id); a path that reached the target is not extended: its
+    # every extension contains the target, so it can never hit again
+    if start_id == target_id:
+        done, frontier = [(start, 0)], []
+    else:
+        done, frontier = [], [(start, start_id)]
+    succs: dict = {}
+    spill = False  # a level outgrew the driver: continue distributed
+    d = 1
+    # shortest-first early exit: levels complete in depth order, so once a
+    # finished level holds >= max_paths paths every deeper path sorts after
+    # the ones already in hand — expanding further levels (the frontier
+    # grows exponentially on branchy graphs) could never change the result
+    while d <= max_depth and frontier and len(done) < max_paths:
+        need = sorted({last for _, last in frontier if last not in succs})
+        if need:
+            # an ordered limit is one TakeOrdered job (a plain limit would
+            # scan the partitions in growing rounds, a job each); its heaps
+            # are sized by the limit, so a level with more successor rows
+            # than the frontier cap continues distributed
+            rows = (
+                _restrict_to_frontier(adj, need, idt)
+                .orderBy("src", "dst")
+                .limit(PATH_FRONTIER_CAP + 1)
+                .collect()
+            )
+            spill = len(rows) > PATH_FRONTIER_CAP
+            if spill:
+                break
+            for v in need:
+                succs[v] = set()
+            for r in rows:
+                succs[r["src"]].add(r["dst"])
+        nxt = _extend_paths(frontier, succs, PATH_FRONTIER_CAP)
+        spill = nxt is None
+        if spill:
             break
-        # lazy checkpoint materialized by the count — one fused job per level;
-        # `done` stays a plain union of slices of already-checkpointed
-        # frontiers, so it needs no materialization of its own
-        frontier = (
-            frontier.join(adj, frontier.last == adj.src)
+        done += [(p, d) for p, last in nxt if last == target_id]
+        frontier = [(p, last) for p, last in nxt if last != target_id]
+        d += 1
+
+    if not spill:
+        # sorted here, the answer is a plain local frame: one job to read
+        done.sort(key=lambda r: (r[1], r[0]))
+        return local_frame(spark, done[:max_paths], _PATH_SCHEMA)
+    hits = _paths_distributed(
+        adj, frontier, target_id, d, max_depth, max_paths - len(done)
+    )
+    return (
+        local_frame(spark, done, _PATH_SCHEMA).unionByName(hits)
+        .orderBy("depth", "path").limit(max_paths)
+    )
+
+
+def _extend_paths(frontier: list, succs: dict, cap: int) -> list | None:
+    """Every simple one-edge extension of the frontier paths, or None once
+    there are more than ``cap`` of them."""
+    out = []
+    for path, last in frontier:
+        for dst in succs[last]:
+            s = str(dst)
+            if s not in path:
+                out.append((f"{path}->{s}", dst))
+        if len(out) > cap:
+            return None
+    return out
+
+
+def _paths_distributed(
+    adj: DataFrame, frontier: list, target_id, depth: int, max_depth: int,
+    max_paths: int,
+) -> DataFrame:
+    """find_paths_between's levels ``depth``..``max_depth`` as distributed
+    frontier self-joins, starting from the driver-held ``frontier``; stops
+    once ``max_paths`` paths reached the target. One action per level: its
+    aggregate returns both the level's size and its hits, and the hits stay
+    slices of the checkpointed level."""
+    spark = adj.sparkSession
+    level = local_frame(
+        spark, frontier, _fields(("path", StringType()), ("last", _id_type(adj)))
+    )
+    found = local_frame(spark, [], _PATH_SCHEMA)
+    n_found = 0
+    for d in range(depth, max_depth + 1):
+        if n_found >= max_paths:
+            break
+        # lazy checkpoint, materialized by the level's aggregate
+        level = (
+            level.join(adj, level.last == adj.src)
             .where(~F.col("path").contains(F.col("dst")))
             .select(
                 F.concat(F.col("path"), F.lit("->"), F.col("dst")).alias("path"),
@@ -679,17 +749,17 @@ def find_paths_between(
             .distinct()
             .localCheckpoint(eager=False)
         )
-        if frontier.count() == 0:
+        is_hit = F.col("last") == F.lit(target_id)
+        n, hits = level.agg(
+            F.count(F.lit(1)), F.count(F.when(is_hit, 1))
+        ).first()
+        if n == 0:
             break
-        hits = frontier.where(F.col("last") == F.lit(target_id)).select(
-            "path", F.lit(d).cast("int").alias("depth")
+        found = found.unionByName(
+            level.where(is_hit).select("path", F.lit(d).cast("int").alias("depth"))
         )
-        done = done.unionByName(hits)
-        # frontier is checkpointed above, so this count re-reads the
-        # materialized level slice — no recomputation of prior levels
-        n_done += hits.count()
-
-    return done.orderBy("depth", "path").limit(max_paths)
+        n_found += hits
+    return found
 
 
 def topo_sort(
@@ -711,12 +781,8 @@ def topo_sort(
         adj, start_ids, min(max_depth, MAX_DEPTH_LIMIT), MAX_RESULTS_LIMIT
     ).select("id")
     spark = edges.sparkSession
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    layer_schema = StructType(
-        [StructField("id", _id_type(adj)), StructField("layer", IntegerType())]
-    )
-    empty = spark.createDataFrame([], layer_schema)
+    layer_schema = _fields(("id", _id_type(adj)), ("layer", IntegerType()))
+    empty = local_frame(spark, [], layer_schema)
 
     # The reachable node set is cap-bounded (≤10k); the edge subset among it
     # is usually cap-bounded too. Collect up to the threshold in ONE job and
@@ -755,7 +821,7 @@ def topo_sort(
         if seen < len(nodes):
             return empty  # cycle among the remaining nodes
         out_rows.sort(key=lambda kv: (kv[1], kv[0]))
-        return spark.createDataFrame(out_rows, layer_schema)
+        return local_frame(spark, out_rows, layer_schema)
 
     # distributed peel fallback for dense reachable subgraphs
     sub = sub.localCheckpoint(eager=True)

@@ -678,32 +678,38 @@ class BlockStore:
         inside one session (reference ``src/storage/engine.zig`` serves
         repeated reads from the in-memory memtable the same way).
 
-        Use this for multi-read flows (ingest endpoint checks, bucketed
-        materialization, edge visibility) where the same snapshot is scanned
-        several times; use :meth:`visible` directly when parquet pushdown /
-        partition pruning is the point (point lookups, workspace scans) —
-        a persisted frame plans as InMemoryTableScan, not a pruned parquet
-        scan. Invalidation is automatic: every block/tombstone write bumps
-        the high-water mark first, keying this cache off the old entry.
-        At cluster scale the same role is played by materialize_bucketed;
-        this cache is spill-backed (MEMORY_AND_DISK) and session-local."""
-        # the version ROOT is part of the key: a compact run by ANOTHER
-        # process flips the pointer without changing the mark, and its
-        # second compact GCs the old root — a mark-only key would keep
-        # serving a frame whose lineage lists the GC'd files (a spilled
-        # partition recompute would then FileNotFound). Root change ⇒ miss.
-        key = (
-            id(self.spark), os.path.abspath(self.path),
-            self.max_sequence(), self._root(),
-        )
+        Daemon reads whose predicate cannot pass the per-id MVCC aggregate
+        (name/path lookups, search, filters, traversals) and multi-read
+        flows (endpoint checks, edge visibility) read this: over
+        :meth:`visible` each such read re-aggregates every version in
+        scope. Use :meth:`visible` only when the predicate commutes with
+        the aggregate and pushdown is the point: an id lookup, or a
+        partition-pruned ``visible(codebase)`` scan. Invalidation is
+        automatic: every block/tombstone write bumps the high-water mark
+        first, keying this cache off the old entry. This cache is
+        spill-backed (MEMORY_AND_DISK) and session-local; at cluster scale
+        materialize_bucketed plays its role."""
+        return self._persisted("blocks", self.visible)
+
+    def _persisted(self, kind: str, build) -> DataFrame:
+        """``build()`` persisted once per (session, store, kind, mark,
+        version root); a miss unpersists the store's views of other marks
+        or roots. The root is in the key because another process's compact
+        flips it without moving the mark, and its second compact GCs the
+        old files a spilled partition would be recomputed from. The view
+        keeps ``defaultParallelism`` partitions, so a read of it is one
+        task per core: AQE cannot coalesce a cached plan's output, and the
+        session's shuffle partition count is curation's to keep."""
+        me = (id(self.spark), os.path.abspath(self.path))
+        key = (*me, kind, self.max_sequence(), self._root())
         hit = _SNAPSHOT_CACHE.get(key)
         if hit is not None:
             return hit
-        for k in [k for k in _SNAPSHOT_CACHE if k[:2] == key[:2] and k != key]:
+        for k in [k for k in _SNAPSHOT_CACHE if k[:2] == me and k[3:] != key[3:]]:
             stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
             if stale is not None:
                 stale.unpersist()
-        snap = self.visible().persist()
+        snap = build().coalesce(self.spark.sparkContext.defaultParallelism).persist()
         _SNAPSHOT_CACHE[key] = snap
         return snap
 
@@ -770,21 +776,7 @@ class BlockStore:
         Invalidation matches snapshot(): edge/block/tombstone appends bump
         the high-water mark (reserve-then-write), compact flips the root —
         either changes the key; _invalidate_snapshot drops both caches."""
-        key = (
-            id(self.spark), os.path.abspath(self.path), "edges",
-            self.max_sequence(), self._root(),
-        )
-        hit = _SNAPSHOT_CACHE.get(key)
-        if hit is not None:
-            return hit
-        me = (id(self.spark), os.path.abspath(self.path), "edges")
-        for k in [k for k in _SNAPSHOT_CACHE if k[:3] == me and k != key]:
-            stale = _SNAPSHOT_CACHE.pop(k, None)  # racing evictors: 2nd no-ops
-            if stale is not None:
-                stale.unpersist()
-        snap = self.visible_edges().persist()
-        _SNAPSHOT_CACHE[key] = snap
-        return snap
+        return self._persisted("edges", self.visible_edges)
 
     # -- cluster-scale layout ----------------------------------------------
 

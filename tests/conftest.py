@@ -1,3 +1,5 @@
+import contextlib
+import itertools
 import os
 import sys
 
@@ -31,6 +33,34 @@ def duck():
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM {src}")
     yield con
     con.close()
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def spark_jobs(spark, label):
+    """Count the Spark jobs the block runs, under a job group of its own.
+    Yields a dict that holds, once the block has exited, ``jobs`` (the job
+    ids) and ``tasks`` (the tasks their stages ran; a skipped stage, such
+    as the lineage of a filled cache, runs none)."""
+    sc = spark.sparkContext
+    group = f"{label}-{next(_JOB_GROUPS)}"
+    out = {"jobs": [], "tasks": 0}
+    sc.setJobGroup(group, label)
+    try:
+        yield out
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    tracker = sc.statusTracker()
+    out["jobs"] = sorted(tracker.getJobIdsForGroup(group))
+    out["tasks"] = sum(
+        tracker.getStageInfo(sid).numCompletedTasks
+        for jid in out["jobs"]
+        for sid in tracker.getJobInfo(jid).stageIds
+        if tracker.getStageInfo(sid) is not None
+    )
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -1,5 +1,5 @@
-"""Property tests: the driver-side fast paths (Kahn peel, union-find) must
-agree with their distributed fallbacks on random graphs."""
+"""Property tests: the driver-side fast paths (Kahn peel, union-find, path
+enumeration) must agree with their distributed fallbacks on random graphs."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -87,6 +87,35 @@ def test_union_find_matches_wcc(spark, pairs):
             parent[hi] = lo
     uf = {x: find(x) for x in parent}
     assert uf == wcc
+
+
+@st.composite
+def cyclic_graph(draw):
+    """Random directed multigraph with cycles and self-loops allowed."""
+    n = draw(st.integers(3, 9))
+    node = st.integers(0, n - 1).map(lambda i: f"n{i:02d}")
+    return draw(st.lists(st.tuples(node, node), min_size=1, max_size=n * 4))
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(cyclic_graph(), st.integers(0, 8), st.integers(0, 8), st.integers(1, 6))
+def test_path_enumeration_driver_matches_distributed(spark, pairs, a, b, depth):
+    """Driver-held path enumeration == the distributed frontier join (cap
+    0 hands every level that has paths to it) on random cyclic graphs."""
+    e = spark.createDataFrame(
+        [(s, d, "calls") for s, d in pairs], "src string, dst string, edge_type string"
+    )
+    src, dst = f"n{a:02d}", f"n{b:02d}"
+    fast = [tuple(r) for r in tv.find_paths_between(e, src, dst, max_depth=depth).collect()]
+    old_cap = tv.PATH_FRONTIER_CAP
+    tv.PATH_FRONTIER_CAP = 0  # force the distributed join from depth 1
+    try:
+        slow = [
+            tuple(r) for r in tv.find_paths_between(e, src, dst, max_depth=depth).collect()
+        ]
+    finally:
+        tv.PATH_FRONTIER_CAP = old_cap
+    assert fast == slow
 
 
 # -- funnel + cohort retention vs brute-force models (random event sets) -----

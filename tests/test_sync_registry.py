@@ -13,6 +13,7 @@ tracking points toward.
 import textwrap
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
 from kausaldb_spark.engine import REGISTRY_BLOCK_ID, KausalEngine
@@ -300,15 +301,9 @@ def test_body_edit_sync_job_ceiling(spark, proj, tmp_path_factory):
     eng.link_codebase(str(proj), "cb")
     (proj / "b.py").write_text(B_PY_V2)
 
-    sc = spark.sparkContext
-    group = f"body-edit-sync-{id(eng)}"
-    sc.setJobGroup(group, "one-file body-edit sync")
-    try:
+    with spark_jobs(spark, "body-edit-sync") as run:
         stats = eng.sync_codebase("cb")
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = len(run["jobs"])
 
     assert stats["files_changed"] == 1 and stats["files_reresolved"] == 0, stats
     assert jobs <= SYNC_JOB_CEILING, jobs
@@ -322,20 +317,14 @@ def test_fresh_store_reads_start_no_spark_jobs(spark, tmp_path_factory):
     views over them, starts no Spark job. Once written, a table reads with
     the same columns in the same order (codebase last in blocks)."""
     st = BlockStore(spark, str(tmp_path_factory.mktemp("fresh_reads")))
-    sc = spark.sparkContext
-    group = f"fresh-store-reads-{id(st)}"
-    sc.setJobGroup(group, "fresh store reads")
-    try:
+    with spark_jobs(spark, "fresh-store-reads") as run:
         for df in (
             st.blocks_raw(), st.edges(), st.tombstones(), st.file_state(),
             st.ref_names(), st.visible(), st.visible("cb"),
             st.current_file_state(), st.current_ref_names(),
         ):
             assert df.collect() == []
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert run["jobs"] == []
 
     empty = st.blocks_raw().dtypes
     assert empty[-1] == ("codebase", "string")
