@@ -746,6 +746,9 @@ def main() -> None:
     box = {
         "loadavg_start": box_start.get("loadavg"),
         "loadavg_end": box_end.get("loadavg"),
+        # the heap the session runs with (session.driver_memory, or
+        # $SPARK_GRAFT_DRIVER_MEM)
+        "driver_memory": spark.sparkContext.getConf().get("spark.driver.memory"),
     }
     if (
         box_start.get("steal_jiffies") is not None

@@ -223,62 +223,11 @@ class KausalEngine:
     # -- mutations (invalidate cache, reference src/query/engine.zig:493-502)
 
     def link_codebase(self, root: str, codebase: str) -> dict[str, int]:
-        """The CLI `link` flow (§3.3): ingest a source tree into the store,
-        record per-file content hashes (sync's change-detection baseline)
-        and the registry entry."""
-        files = ing.list_files(root)
-        # parse once, LITERALLY (r12 opt round): materialize=True checkpoints
-        # the combined units+edges relation from ONE mapInPandas pass —
-        # blocks, edges, and the reference index all consume cheap filtered
-        # projections of it (the previous shape checkpointed units and edges
-        # separately, which ran the full file parse twice)
-        units, raw_edges = ing.parse_files(self.spark, files, materialize=True)
-        file_index = local_frame(
-            self.spark, [(i, rel) for i, (_, rel) in enumerate(files)],
-            "file_idx long, file_path string",
-        )
-        # ONE lease spans read-base → resolve → append → registry write:
-        # with resequence=False the caller owns the sequences, so reading
-        # max_sequence() outside the lease would let two engines both
-        # read the same base and double-assign a range — exactly the
-        # race the storage lease exists to exclude. The lease is
-        # reentrant; the appends inside renew it.
-        with self.store._writer_lease():
-            epochs = {fp: seq for fp, (_, seq) in self._file_state(codebase).items()}
-            base = self.store.max_sequence()
-            blocks, edges = ing.resolve_and_build(
-                units, raw_edges, codebase, base, file_index, checkpoint=True
-            )
-            # pin=False: the batch is checkpointed, so deterministic
-            self.store.append_blocks(blocks, resequence=False, pin=False)
-            # endpoint-valid BY CONSTRUCTION: resolve_and_build semi-joins
-            # both ends against this batch's block ids, and those blocks
-            # were appended on the line above — re-checking against a
-            # snapshot here would re-read the just-written parquet and
-            # shuffle the edge relation twice for a check that cannot fail
-            self.store.append_edges(edges, assume_endpoints_exist=True)
-            self.store.record_file_state(
-                ing.file_hashes(self.spark, files).select(
-                    F.lit(codebase).alias("codebase"), "file_path",
-                    "content_hash",
-                    F.lit(base).cast("bigint").alias("ingest_seq"),
-                )
-            )
-            self._record_refs(codebase, [rel for _, rel in files], raw_edges, base)
-            epochs.update((rel, base) for _, rel in files)
-            counts = self._written_counts(
-                codebase, self.store.visible(codebase).select("id"), epochs
-            )
-            now = int(time.time())
-            reg = self.registry()
-            reg[codebase] = {
-                "path": root,
-                "linked_at": reg.get(codebase, {}).get("linked_at", now),
-                "last_sync_at": now,
-                "block_count": counts["blocks"], "edge_count": counts["edges"],
-            }
-            self._save_registry(reg)
-        return counts
+        """The CLI `link` flow (§3.3): a sync that re-ingests every file.
+        Stored hashes are ignored, so every file on disk counts as changed;
+        the commit is :meth:`sync_codebase`'s, which describes both verbs.
+        The registry entry keeps its first ``linked_at``."""
+        return self._ingest(codebase, root, every_file=True)
 
     def _record_refs(
         self, codebase: str, rel_paths: list[str], raw_edges, base: int
@@ -302,23 +251,39 @@ class KausalEngine:
         self.store.record_ref_names(sent.unionByName(refs))
 
     def sync_codebase(self, codebase: str, root: str | None = None) -> dict[str, int]:
-        """Incremental re-sync: hash-diff the tree against the stored
-        file_state, re-parse ONLY changed/new files, tombstone removed ones.
-        A no-op sync reads file bytes but parses nothing and appends no
-        blocks. (The reference re-ingests the whole tree on sync,
-        src/workspace/manager.zig:248-273 — change detection is the
-        at-monorepo-scale upgrade its metadata tracking points toward.)
+        """Bring the store's copy of a source tree up to date: the one
+        commit path of both `sync` and `link`. The verbs differ only in
+        which files count as changed: a sync hash-diffs the tree against the
+        stored file_state and re-parses only files whose hash moved; a link
+        (:meth:`link_codebase`) ignores the stored hashes and re-parses every
+        file on disk. Either way, a stored file no longer on disk is
+        removed: its blocks are tombstoned and its file_state row gets a
+        NULL hash. A no-op sync reads file bytes but parses nothing and
+        appends no blocks. (The reference re-ingests the whole tree on
+        both verbs, src/workspace/manager.zig:113-205,248-273 — change
+        detection is the at-monorepo-scale upgrade its metadata tracking
+        points toward.)
 
-        One leased view: the whole sync, from the state diff to the
+        One commit order: tombstones of the shadowed files' old versions →
+        blocks → edges → ref_names → file_state → registry. A crash before
+        the file_state write leaves the old hashes, so the retry re-parses
+        the same files; every file whose file_state row is current also has
+        its ref_names sentinel.
+
+        One leased view: the whole commit, from the state diff to the
         registry write, holds the writer lease, and the codebase's MVCC
         view ``visible(codebase)`` is persisted ONCE. No other writer can
         append meanwhile, so that one view serves every read of the old
         state: the old definitions, the local definitions of candidate
-        files, the tombstone batch, and the unchanged files' symbols and
-        block ids that re-parsed edges resolve against (stale edges of
+        files, the tombstone batch, and the kept files' symbols and block
+        ids that re-parsed edges resolve against (stale edges of
         re-ingested files are epoch-shadowed, BlockStore.visible_edges).
-        The returned block/edge counts come from the same view and the
-        checkpointed batch; the view is released when the sync ends.
+        Each of these reads runs only when the stored file state says it
+        can matter: a commit that keeps no stored file (a link) reads no
+        old definitions, symbols or ids, and one whose shadowed files have
+        no stored state writes no tombstone batch. The returned block/edge
+        counts come from the same view and the checkpointed batch; the
+        view is released when the commit ends.
 
         Convergence (sync ≡ fresh link, ADVICE r4 #1): resolution of a bare
         name reads only the set of unit_ids that define it (a definition in
@@ -334,11 +299,16 @@ class KausalEngine:
         does not define it itself (file-local-first resolution) is
         re-parsed and re-resolved too ("files_reresolved" in the stats).
         The candidate lookup reads the inverted ``ref_names`` index
-        maintained at every link/sync (change-bounded: one row per (file,
+        maintained at every commit (change-bounded: one row per (file,
         referenced name)); stores predating the index fall back to a token
-        scan of stored block content (corpus-bounded, conservative).
-        Reference semantics: ``src/workspace/manager.zig:113-205``, which
-        re-ingests the whole tree every sync."""
+        scan of stored block content (corpus-bounded, conservative)."""
+        return self._ingest(codebase, root, every_file=False)
+
+    def _ingest(
+        self, codebase: str, root: str | None, every_file: bool
+    ) -> dict[str, int]:
+        """sync_codebase's commit; ``every_file`` counts every file on disk
+        as changed (link)."""
         with self.store._writer_lease():
             reg = self.registry()
             if root is None:
@@ -352,7 +322,9 @@ class KausalEngine:
             }
             state = self._file_state(codebase)
             stored = {rel: h for rel, (h, _) in state.items()}
-            changed = sorted(rel for rel, h in cur.items() if stored.get(rel) != h)
+            changed = sorted(
+                rel for rel, h in cur.items() if every_file or stored.get(rel) != h
+            )
             removed = sorted(
                 rel for rel, h in stored.items() if h is not None and rel not in cur
             )
@@ -360,26 +332,21 @@ class KausalEngine:
                 "files_changed": len(changed), "files_removed": len(removed),
                 "files_unchanged": len(cur) - len(changed),
             }
-            if not changed and not removed:
-                if codebase in reg:
-                    reg[codebase]["last_sync_at"] = int(time.time())
-                    self._save_registry(reg)
+            if changed or removed or every_file:
+                view = self.store.visible(codebase).persist()
+                try:
+                    stats.update(self._sync_changes(
+                        codebase, files, cur, state, changed, removed, view
+                    ))
+                finally:
+                    view.unpersist()
+            elif codebase not in reg:
                 return stats
-
-            view = self.store.visible(codebase).persist()
-            try:
-                stats.update(self._sync_changes(
-                    codebase, files, cur, state, changed, removed, view
-                ))
-            finally:
-                view.unpersist()
             now = int(time.time())
-            entry = reg.get(codebase, {"path": root, "linked_at": now})
-            entry.update(
-                {"path": root, "last_sync_at": now,
-                 "block_count": stats["blocks"], "edge_count": stats["edges"]}
-            )
-            reg[codebase] = entry
+            entry = reg.setdefault(codebase, {"linked_at": now})
+            entry.update(path=root, last_sync_at=now)
+            if "blocks" in stats:
+                entry.update(block_count=stats["blocks"], edge_count=stats["edges"])
             self._save_registry(reg)
         return stats
 
@@ -387,11 +354,14 @@ class KausalEngine:
         self, codebase: str, files: list[tuple[str, str]], cur: dict,
         state: dict, changed: list[str], removed: list[str], view: DataFrame,
     ) -> dict[str, int]:
-        """Write one sync's changes; returns files_reresolved, blocks and
-        edges. ``view`` is the codebase's persisted pre-sync MVCC view,
+        """Write one commit's changes; returns files_reresolved, blocks and
+        edges. ``view`` is the codebase's persisted pre-commit MVCC view,
         taken under the writer lease the caller holds."""
         abs_by_rel = dict((rel, ap) for ap, rel in files)
         affected = changed + removed
+        epochs = {rel: seq for rel, (h, seq) in state.items() if h is not None}
+        # stored files this commit leaves as they are; only these can rebind
+        kept = epochs.keys() - set(affected)
         units_c = raw_c = None
         if changed:
             # materialize=True: one combined checkpoint = one parse pass
@@ -399,26 +369,29 @@ class KausalEngine:
                 self.spark, [(abs_by_rel[rel], rel) for rel in changed],
                 materialize=True,
             )
-        # this first action over the view also fills its cache, before any
-        # write below changes the store
-        names = self._changed_names(view, affected, units_c)
-        epochs = {rel: seq for rel, (h, seq) in state.items() if h is not None}
+        # when it runs, this first action over the view also fills its
+        # cache, before any write below changes the store
+        names = self._changed_names(view, affected, units_c) if kept else set()
         reresolve = (
             self._rebinding_files(codebase, view, names, affected, epochs, abs_by_rel)
             if names else []
         )
 
-        touch = changed + reresolve  # files being re-ingested this sync
+        touch = changed + reresolve  # files being re-ingested this commit
         shadowed = affected + reresolve
-        # tombstone_where takes a Column predicate, so this one site keeps
-        # isin; sync batches are change-bounded and a >1000-file tombstone
-        # sweep should go through unlink/tombstone jobs
-        self.store.tombstone_where(
-            (F.col("codebase") == codebase) & F.col("file_path").isin(shadowed),
-            visible=view,
-        )
+        # a file without stored state has no old version to shadow; an empty
+        # batch would still add a tombstone join to every later visible()
+        if not epochs.keys().isdisjoint(shadowed):
+            self.store.tombstone_where(
+                F.col("codebase") == codebase,
+                visible=self._path_filter(view, shadowed, keep=True),
+            )
         base = self.store.max_sequence()
-        vis_rest = self._path_filter(view, shadowed, keep=False)
+        # the kept files' visible blocks; with none kept, limit(0) folds the
+        # old view out of every plan below
+        vis_rest = (
+            self._path_filter(view, shadowed, keep=False) if kept else view.limit(0)
+        )
         ids = vis_rest.select("id")
         if touch:
             if reresolve:

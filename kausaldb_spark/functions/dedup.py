@@ -196,30 +196,6 @@ def capped_buckets(
     return kept, dropped
 
 
-def lsh_candidates(
-    sigs: DataFrame, band_size: int = BAND_SIZE, max_bucket_size: int = MAX_LSH_BUCKET
-) -> DataFrame:
-    """Band the signature, bucket-hash each band, emit candidate pairs that
-    share any (band, bucket) — the only join in the pipeline, and it is
-    per-bucket (never all-pairs). Buckets over ``max_bucket_size`` are
-    dropped before the self-join (quadratic guard)."""
-    bands = (
-        sigs.withColumn("band", (F.col("k") / band_size).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(F.md5(F.concat_ws("|", F.array_sort(F.collect_list("minh")))).alias("bucket"))
-        .localCheckpoint(eager=True)  # self-joined below — avoid recomputing both sides
-    )
-    bands, _dropped = capped_buckets(bands, max_bucket_size)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")))
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def jaccard_verify(
     candidates: DataFrame, corpus_cand: DataFrame, num: int, den: int,
     n: int = 3,

@@ -36,11 +36,6 @@ def find_blocks_batched(blocks: DataFrame, ids_df: DataFrame) -> DataFrame:
     return blocks.join(ids, "id", "left_semi")
 
 
-def block_exists_count(blocks: DataFrame, ids_df: DataFrame) -> DataFrame:
-    """N4: how many of the requested ids exist (visible)."""
-    return find_blocks_batched(blocks, ids_df).agg(F.count("*").alias("n_existing"))
-
-
 def _entity_name() -> Column:
     # entity = last ':'-segment of unit_id (src/query/engine.zig:536-615)
     return F.element_at(F.split(F.col("unit_id"), ":"), -1)

@@ -16,6 +16,31 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
+# The driver heap's ceiling. local[32] puts 32 executor cores in ONE JVM:
+# parquet writers buffer a row group PER TASK outside Spark's memory
+# manager (32 x ~128 MB during a wide write), on top of the columnar cache
+# and execution memory. A real cluster provisions 1-2 GB per core; 16g gave
+# 0.5 GB/core and the r11 sf10 (100x) rehearsal OOM'd the store write
+# stage. 48g ~= 1.5 GB/core, the low end of a production executor profile.
+MAX_DRIVER_MEM_GB = 48
+
+
+def driver_memory() -> str:
+    """The driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else half the
+    machine's physical memory in whole GiB (at least 1), capped at
+    MAX_DRIVER_MEM_GB. The JVM does not hand back heap it has grown into:
+    on a 15 GB box without swap a 48g heap let the driver grow until the
+    machine OOM-killed it."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf here
+        return f"{MAX_DRIVER_MEM_GB}g"
+    return f"{max(1, min(MAX_DRIVER_MEM_GB, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "kausaldb-spark",
     cpus: str | None = None,
@@ -39,15 +64,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
-        # local[32] puts 32 executor cores in ONE JVM: parquet writers
-        # buffer a row group PER TASK outside Spark's memory manager
-        # (32 x ~128 MB during a wide write), on top of the columnar
-        # cache and execution memory. A real cluster provisions 1-2 GB
-        # per core; 16g here gave 0.5 GB/core and the r11 sf10 (100x)
-        # rehearsal OOM'd the store write stage. 48g ~= 1.5 GB/core, the
-        # low end of a production executor profile — still under half
-        # the 128 GiB box.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         # zstd end-to-end for a TEXT-heavy corpus: parquet writes (store
         # copies, bucketed warehouse tables, derived fixtures) and shuffle
         # /broadcast/checkpoint blocks compress ~2x denser than the

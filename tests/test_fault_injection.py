@@ -5,12 +5,13 @@ The reference proves crash-safety with a deterministic simulation VFS that
 injects failures at every I/O point (``src/sim/simulation_vfs.zig``,
 scenarios ``src/tests/scenarios/vfs_fault.zig``, ``docs/DESIGN.md:50-57``).
 This store's equivalent risk surface is the ORDER of parquet appends inside
-one logical commit:
+one logical commit. Link and sync share one commit path (engine.py
+sync_codebase) and so one order:
 
-    link: append_blocks → append_edges → record_file_state →
-          record_ref_names → save_registry          (engine.py link_codebase)
-    sync: tombstone_where → append_blocks → append_edges →
-          record_ref_names → record_file_state → save_registry
+    tombstone_where → append_blocks → append_edges → record_ref_names →
+    record_file_state → save_registry
+
+(a fresh link has no stored file to shadow, so it writes no tombstones)
 
 Each test kills the flow immediately AFTER one append completes (the crash
 window between appends), reopens the store with a fresh engine (process
@@ -78,8 +79,8 @@ def fresh():
 }
 
 LINK_POINTS = [
-    "append_blocks", "append_edges", "record_file_state",
-    "record_ref_names", "save_registry",
+    "append_blocks", "append_edges", "record_ref_names",
+    "record_file_state", "save_registry",
 ]
 SYNC_POINTS = ["tombstone_where"] + LINK_POINTS
 
@@ -230,22 +231,25 @@ def test_sync_crash_window(spark, tmp_path_factory, control, point):
     assert stats["files_changed"] == 0 and stats["files_removed"] == 0
 
 
-def test_link_crash_before_refs_then_sync_falls_back(spark, tmp_path_factory, control):
-    """The one asymmetric window: link commits file_state BEFORE ref_names,
-    so a crash between them leaves current hashes with a hole in the
-    inverted index. The next sync must detect partial coverage (missing
-    name=NULL sentinels) and fall back to the conservative token scan —
-    still converging to the control."""
+def test_link_crash_after_file_state_leaves_every_file_indexed(
+    spark, tmp_path_factory, control
+):
+    """record_file_state is the commit's last table write before the
+    registry, and ref_names lands before it: a link killed right after it
+    leaves every current file with its name=NULL sentinel in the inverted
+    index, so the next sync keeps the index lookup (no hole for it to fall
+    back over) and converges to the control. The token-scan fallback for
+    a store without the index is covered by
+    test_sync_registry.test_legacy_store_falls_back_to_content_scan."""
     root = str(tmp_path_factory.mktemp("ref_tree"))
     store = str(tmp_path_factory.mktemp("ref_store"))
     _write_tree(root, TREE_V1)
     eng = KausalEngine(spark, store)
-    _arm(eng, "record_file_state")  # dies before record_ref_names runs
+    _arm(eng, "record_file_state")  # dies before save_registry runs
     with pytest.raises(_Injected):
         eng.link_codebase(root, "cb")
 
     eng2 = KausalEngine(spark, store)
-    # sentinel coverage is incomplete: fewer indexed files than current files
     n_files = (
         eng2.store.current_file_state()
         .where(F.col("content_hash").isNotNull()).count()
@@ -253,10 +257,10 @@ def test_link_crash_before_refs_then_sync_falls_back(spark, tmp_path_factory, co
     n_covered = (
         eng2.store.current_ref_names().where(F.col("name").isNull()).count()
     )
-    assert n_covered < n_files
+    assert n_covered == n_files == len(TREE_V1)
 
     _write_tree(root, TREE_V2)
-    # the crash also preceded save_registry, so the retry names the root
+    # the crash also preceded save_registry, so the sync names the root
     # explicitly (the CLI `sync --path` form)
     eng2.sync_codebase("cb", root=root)
     assert _visible_state(eng2, "cb") == control[1]

@@ -21,7 +21,8 @@ from kausaldb_spark.storage import BlockStore
 
 # Heavy tests are opt-in via `-m scale` (see pytest.ini), marked one by
 # one: the default run keeps the sync convergence, incremental-sync,
-# local-shadowing and job-count tests, so sync_codebase has tier-1 coverage.
+# local-shadowing, re-link and job-count tests, so the one commit path of
+# sync_codebase and link_codebase has tier-1 coverage.
 
 A_PY = textwrap.dedent('''
     def fa():
@@ -71,6 +72,25 @@ def _edges_from(eng, src_file):
         .where(F.col("src_file") == src_file)
         .collect()
     ]
+
+
+def _blocks_of(eng, codebase):
+    """Visible (id, unit_id, file_path, content) of one codebase."""
+    return {
+        (r["id"], r["unit_id"], r["file_path"], r["content"])
+        for r in eng.store.visible()
+        .where(F.col("codebase") == codebase)
+        .select("id", "unit_id", "file_path", "content")
+        .collect()
+    }
+
+
+def _edges_of(eng, codebase):
+    """Visible (src, dst, edge_type) edges leaving one codebase's blocks."""
+    ids = eng.store.visible().where(F.col("codebase") == codebase).select("id")
+    ev = eng.store.visible_edges()
+    ev = ev.join(ids, ev.src == ids.id, "left_semi")
+    return {(r["src"], r["dst"], r["edge_type"]) for r in ev.collect()}
 
 
 def test_incremental_sync(spark, proj, tmp_path_factory):
@@ -244,21 +264,6 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         ("del", "f1.py", None),
     ]
 
-    def blocks_snapshot(e, cb):
-        return {
-            (r["id"], r["unit_id"], r["file_path"], r["content"])
-            for r in e.store.visible()
-            .where(F.col("codebase") == cb)
-            .select("id", "unit_id", "file_path", "content")
-            .collect()
-        }
-
-    def edges_snapshot(e, cb):
-        ids = e.store.visible().where(F.col("codebase") == cb).select("id")
-        ev = e.store.visible_edges()
-        ev = ev.join(ids, ev.src == ids.id, "left_semi")
-        return {(r["src"], r["dst"], r["edge_type"]) for r in ev.collect()}
-
     for i, (action, name, body) in enumerate(edit_script):
         if action == "del":
             (root / name).unlink()
@@ -275,10 +280,10 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         fresh = KausalEngine(spark, fresh_store)
         fresh.link_codebase(str(root), "cb")
 
-        assert blocks_snapshot(eng, "cb") == blocks_snapshot(fresh, "cb"), (
+        assert _blocks_of(eng, "cb") == _blocks_of(fresh, "cb"), (
             f"block divergence after step {i}: {action} {name}"
         )
-        assert edges_snapshot(eng, "cb") == edges_snapshot(fresh, "cb"), (
+        assert _edges_of(eng, "cb") == _edges_of(fresh, "cb"), (
             f"edge divergence after step {i}: {action} {name}"
         )
         shutil.rmtree(fresh_store, ignore_errors=True)
@@ -309,6 +314,54 @@ def test_body_edit_sync_job_ceiling(spark, proj, tmp_path_factory):
     assert jobs <= SYNC_JOB_CEILING, jobs
     counts = eng._codebase_counts("cb")
     assert {k: stats[k] for k in counts} == counts
+
+
+# Spark jobs a fresh link of the `proj` tree may start. A link keeps no
+# stored file, so it pays none of a sync's reads of the old state: it runs
+# 34 (4 cores), one more than the 33 of the link's former write path, for
+# the collect of the file hashes that a sync diffs against.
+LINK_JOB_CEILING = 34
+
+
+def test_fresh_link_job_ceiling(spark, proj, tmp_path_factory):
+    """A fresh link runs the sync commit with every file changed and no
+    stored state: its Spark jobs stay under the ceiling, and the counts it
+    returns match a whole-store recount."""
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("link_jobs_store")))
+
+    with spark_jobs(spark, "fresh-link") as run:
+        stats = eng.link_codebase(str(proj), "cb")
+    jobs = len(run["jobs"])
+
+    assert jobs <= LINK_JOB_CEILING, jobs
+    assert stats["files_changed"] == 3 and stats["files_unchanged"] == 0, stats
+    counts = eng._codebase_counts("cb")
+    assert {k: stats[k] for k in counts} == counts
+
+
+def test_relink_equals_fresh_link(spark, proj, tmp_path_factory):
+    """Linking a linked codebase again re-ingests every file and removes
+    the files gone from disk: after a delete and an edit, the re-linked
+    store shows the same visible blocks, edges and registry counts as a
+    fresh link of the same tree, and a name only the deleted file defined
+    is no longer found."""
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("relink_store")))
+    eng.link_codebase(str(proj), "cb")
+    assert eng.find_by_name("cb", "function", "fa").count() == 1
+    (proj / "a.py").unlink()
+    (proj / "b.py").write_text(B_PY_V2)
+
+    stats = eng.link_codebase(str(proj), "cb")
+    fresh = KausalEngine(spark, str(tmp_path_factory.mktemp("relink_fresh")))
+    fresh.link_codebase(str(proj), "cb")
+
+    assert _blocks_of(eng, "cb") == _blocks_of(fresh, "cb")
+    assert _edges_of(eng, "cb") == _edges_of(fresh, "cb")
+    counts = ("block_count", "edge_count")
+    got, want = eng.registry()["cb"], fresh.registry()["cb"]
+    assert [got[k] for k in counts] == [want[k] for k in counts] == [2, 1]
+    assert eng.find_by_name("cb", "function", "fa").count() == 0
+    assert stats["files_changed"] == 2 and stats["files_removed"] == 1, stats
 
 
 def test_fresh_store_reads_start_no_spark_jobs(spark, tmp_path_factory):
