@@ -19,7 +19,7 @@ import time
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kausaldb_spark.operators import context as cx
@@ -129,9 +129,8 @@ class KausalEngine:
             " unit_id string, codebase string, file_path string,"
             " metadata_json string, content string",
         )
-        # resequence → last-writer-wins; pin=False: a literal row is
-        # deterministic, so the sequence agg and the write may each read it
-        self.store.append_blocks(block, pin=False)
+        # resequence → last-writer-wins; a literal row's range is known
+        self.store.append_blocks(block, sequences=(0, 0))
         # the registry lives IN the store as a block: rewriting it is a
         # mutation like any other, so the result cache must drop (a cached
         # keyword_search can otherwise serve the pre-write registry block
@@ -156,35 +155,6 @@ class KausalEngine:
             # whole store's edge count
             "edges": e.join(cb_ids, e.src == cb_ids.id, "left_semi").count(),
         }
-
-    def _written_counts(
-        self, codebase: str, ids: DataFrame, epochs: dict[str, int]
-    ) -> dict[str, int]:
-        """The registry's block and edge counts right after a link or sync
-        wrote ``codebase``, from that write's own relations rather than a
-        whole-store snapshot the registry append would discard at once.
-        ``ids`` are the codebase's visible block ids, each once, and
-        ``epochs`` every file's current ingest epoch. An edge counts when
-        both ends are among ``ids`` and its file's epoch does not shadow it:
-        BlockStore.visible_edges' rules for the edges ingestion writes,
-        which always join two blocks of one codebase. On such a codebase
-        this equals :meth:`_codebase_counts`."""
-        st = local_frame(
-            self.spark, sorted(epochs.items()), "_fp string, _epoch bigint"
-        )
-        e = self.store.edges()
-        e = (
-            e.join(ids, e.src == ids.id, "left_semi")
-            .join(ids, e.dst == ids.id, "left_semi")
-            .join(
-                F.broadcast(st),
-                (e.codebase == F.lit(codebase))
-                & (e.src_file == F.col("_fp"))
-                & (e.ingest_seq < F.col("_epoch")),
-                "left_anti",
-            )
-        )
-        return {"blocks": ids.count(), "edges": e.count()}
 
     def _file_state(self, codebase: str) -> dict[str, tuple[str | None, int]]:
         """{file_path: (content_hash, ingest_seq)} of the codebase's current
@@ -272,7 +242,8 @@ class KausalEngine:
 
         One leased view: the whole commit, from the state diff to the
         registry write, holds the writer lease, and the codebase's MVCC
-        view ``visible(codebase)`` is persisted ONCE. No other writer can
+        view ``visible(codebase)`` is persisted ONCE (one partition per core,
+        so each read of it is one task per core). No other writer can
         append meanwhile, so that one view serves every read of the old
         state: the old definitions, the local definitions of candidate
         files, the tombstone batch, and the kept files' symbols and block
@@ -281,9 +252,12 @@ class KausalEngine:
         Each of these reads runs only when the stored file state says it
         can matter: a commit that keeps no stored file (a link) reads no
         old definitions, symbols or ids, and one whose shadowed files have
-        no stored state writes no tombstone batch. The returned block/edge
-        counts come from the same view and the checkpointed batch; the
-        view is released when the commit ends.
+        no stored state writes no tombstone batch. The view is released
+        when the commit ends. The commit counts itself: the batch's edges
+        are endpoint-valid by construction (resolve_and_build), its sequence
+        range and distinct ids are observed on its checkpoint, the edge rows
+        on their write, and the kept files add their share in one action
+        (:meth:`_kept_counts`); the sums equal :meth:`_codebase_counts`.
 
         Convergence (sync ≡ fresh link, ADVICE r4 #1): resolution of a bare
         name reads only the set of unit_ids that define it (a definition in
@@ -333,7 +307,9 @@ class KausalEngine:
                 "files_unchanged": len(cur) - len(changed),
             }
             if changed or removed or every_file:
-                view = self.store.visible(codebase).persist()
+                view = self.store.visible(codebase).coalesce(
+                    self.spark.sparkContext.defaultParallelism
+                ).persist()
                 try:
                     stats.update(self._sync_changes(
                         codebase, files, cur, state, changed, removed, view
@@ -392,7 +368,7 @@ class KausalEngine:
         vis_rest = (
             self._path_filter(view, shadowed, keep=False) if kept else view.limit(0)
         )
-        ids = vis_rest.select("id")
+        counts, blocks = {"blocks": 0, "edges": 0}, None
         if touch:
             if reresolve:
                 units_x, raw_x = ing.parse_files(
@@ -408,21 +384,21 @@ class KausalEngine:
                 self.spark, [(i, rel) for i, rel in enumerate(touch)],
                 "file_idx long, file_path string",
             )
-            extra_symbols = vis_rest.select(
-                "file_path", _bare_of_unit().alias("bare"), "unit_id"
+            blocks, edges, batch = ing.resolve_and_build(
+                units, raw_edges, codebase, base, file_index, checkpoint=True,
+                extra_symbols=vis_rest.select(_bare_of_unit().alias("bare"), "unit_id", "id"),
             )
-            blocks, edges = ing.resolve_and_build(
-                units, raw_edges, codebase, base, file_index,
-                extra_symbols=extra_symbols, known_ids=ids, checkpoint=True,
+            self.store.append_blocks(
+                blocks, resequence=False, sequences=(batch["lo"], batch["hi"])
             )
-            # pin=False: the batch is checkpointed, so deterministic
-            self.store.append_blocks(blocks, resequence=False, pin=False)
-            # endpoint-valid BY CONSTRUCTION: resolve_and_build semi-joined
-            # both ends against batch blocks ∪ known_ids (vis_rest), and
-            # the batch blocks landed on the line above
-            self.store.append_edges(edges, assume_endpoints_exist=True)
+            # endpoint-valid by construction (resolve_and_build): no check
+            written = Observation()
+            self.store.append_edges(
+                edges.observe(written, F.count(F.lit(1)).alias("n")),
+                assume_endpoints_exist=True,
+            )
             self._record_refs(codebase, touch, raw_edges, base)
-            ids = ids.unionByName(blocks.select("id").distinct())
+            counts = {"blocks": batch["ids"], "edges": written.get["n"]}
         # re-resolved files keep their hash but move to the new epoch so
         # their superseded edges are shadowed (BlockStore.visible_edges)
         state_rows = (
@@ -437,12 +413,43 @@ class KausalEngine:
                 " ingest_seq bigint",
             )
         )
-        epochs_after = {rel: seq for rel, (_, seq) in state.items()}
-        epochs_after.update((rel, base) for rel in shadowed)
-        return {
-            "files_reresolved": len(reresolve),
-            **self._written_counts(codebase, ids, epochs_after),
-        }
+        if kept:
+            more = self._kept_counts(
+                codebase, vis_rest, blocks, {rel: epochs[rel] for rel in kept}
+            )
+            counts = {k: n + more[k] for k, n in counts.items()}
+        return {"files_reresolved": len(reresolve), **counts}
+
+    def _kept_counts(
+        self, codebase: str, vis_rest: DataFrame, batch: DataFrame | None,
+        epochs: dict[str, int],
+    ) -> dict[str, int]:
+        """In one action, the kept files' visible blocks (``vis_rest``) and
+        their visible edges: at or after the file's epoch, from a block of
+        ``vis_rest`` to one of it or of ``batch``. Read from the store as it
+        is, so a block deleted since its file's ingest counts in neither."""
+        st = local_frame(self.spark, sorted(epochs.items()), "_fp string, _epoch bigint")
+        kept = vis_rest.select("id")
+        live = kept if batch is None else kept.unionByName(batch.select("id"))
+        e = self.store.edges().where(F.col("codebase") == codebase)
+        e = (
+            e.join(
+                F.broadcast(st),
+                (e.src_file == F.col("_fp")) & (e.ingest_seq >= F.col("_epoch")),
+                "left_semi",
+            )
+            .join(kept, e.src == kept.id, "left_semi")
+            .join(live, e.dst == live.id, "left_semi")
+        )
+        counted = Observation()
+        vis_rest.select(F.lit(True).alias("_block")).unionByName(
+            e.select(F.lit(False).alias("_block"))
+        ).observe(
+            counted,
+            F.count_if("_block").alias("blocks"),
+            F.count_if(~F.col("_block")).alias("edges"),
+        ).write.format("noop").mode("overwrite").save()
+        return counted.get
 
     def _changed_names(
         self, view: DataFrame, affected: list[str], units_c: DataFrame | None
@@ -645,8 +652,6 @@ class KausalEngine:
                 "filtered", None,
                 lambda: flt.filtered_query(self.store.snapshot(), expr, offset, max_results),
             )
-        from pyspark.sql import Observation
-
         def build():
             o_scan, o_match = Observation(), Observation()
             vis = self.store.snapshot().observe(
@@ -694,8 +699,6 @@ class KausalEngine:
                 out = out.where(out.codebase == workspace)
             out = out.select(*(c for c, _ in _TRAVERSE_COLS))
             if with_stats:
-                from pyspark.sql import Observation
-
                 o_match = Observation()
                 out = out.observe(o_match, F.count(F.lit(1)).alias("rows_matched"))
                 self._pending_obs.append((None, o_match))

@@ -62,10 +62,8 @@ def visible_blocks(blocks_raw: DataFrame, tombstones: DataFrame) -> DataFrame:
     """The snapshot every query reads: latest versions minus tombstoned ids."""
     latest = latest_versions(blocks_raw)
     shadow = F.broadcast(
-        tombstones.groupBy("block_id").agg(F.max("sequence").alias("_ts_seq"))
+        tombstones.select("block_id", F.col("sequence").alias("_ts_seq"))
     )
-    return (
-        latest.join(shadow, latest.id == shadow.block_id, "left")
-        .where(F.col("_ts_seq").isNull() | (F.col("_ts_seq") < F.col("sequence")))
-        .drop("block_id", "_ts_seq")
-    )
+    # no per-id tombstone aggregate: the sequence condition rides the join
+    cond = (latest.id == shadow.block_id) & (shadow._ts_seq >= latest.sequence)
+    return latest.join(shadow, cond, "left_anti")

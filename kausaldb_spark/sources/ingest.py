@@ -10,8 +10,9 @@ then block/edge writes (``src/ingestion/ingest_file.zig:85-118``).
 Spark shape: the *driver* lists files (cheap metadata op), executors read and
 parse them via ``mapInPandas`` batches (the parser is Python ``ast`` — a real
 parser has no JVM builtin, so this is the legitimate Pandas-UDF tier), and
-resolution is a pair of DataFrame joins (exact qualified name, then
-same-file fallback) — never a driver-side loop over units.
+resolution is same-file first (answered by the task that parsed the file),
+then one aggregation of the codebase's symbols by bare name and one join —
+never a driver-side loop over units.
 
 At 100 TB (monorepo-scale ingest): file listing comes from a manifest table
 instead of os.walk; parse stays embarrassingly parallel (one file never
@@ -87,6 +88,8 @@ _EDGE_SCHEMA = StructType(
         StructField("src_name", StringType()),      # qualified unit name
         StructField("dst_name", StringType()),      # raw target (unresolved)
         StructField("edge_type", StringType()),
+        # the same-file unit dst_name resolves to, or NULL (_local_targets)
+        StructField("dst_local", StringType()),
     ]
 )
 
@@ -608,6 +611,17 @@ def _parse_zig(rel_path: str, source: str) -> tuple[list, list]:
     return p.units, p.edges
 
 
+def _local_targets(units: list) -> dict[str, str]:
+    """Bare name -> the least qualified name defining it in the file: the
+    file-local half of resolve_and_build, answered where the file is parsed."""
+    out: dict[str, str] = {}
+    for u in units:
+        bare = u[2].rsplit(".", 1)[-1]
+        if bare not in out or u[2] < out[bare]:
+            out[bare] = u[2]
+    return out
+
+
 def _parse_source(rel_path: str, source: str) -> tuple[list, list]:
     """Extension-dispatched parser tier (S8): Python ast, Zig heuristic."""
     if rel_path.endswith(DEFAULT_EXTENSIONS):
@@ -693,14 +707,19 @@ def parse_files(
                 src, err = _read_capped(ap)
                 if err is not None:
                     rows.append(("u", rp, "document", os.path.basename(rp),
-                                 "", 1, 1, "", err, "", "", ""))
+                                 "", 1, 1, "", err, "", "", "", None))
                     continue
                 units, edges = _parse_source(rp, src)
-                rows.extend(("u", *u, "", "", "") for u in units)
+                rows.extend(("u", *u, "", "", "", None) for u in units)
                 if rp.endswith(CODE_EXTENSIONS):
+                    local = _local_targets(units)
+                    names = {u[2] for u in units}
+                    # an edge leaves one of the file's own units, so its
+                    # src is a block of the batch
                     rows.extend(
-                        ("e", fp, "", "", "", 0, 0, "", None, s, d, et)
+                        ("e", fp, "", "", "", 0, 0, "", None, s, d, et, local.get(d))
                         for fp, s, d, et in edges
+                        if s in names
                     )
             yield pd.DataFrame(rows, columns=cols)
 
@@ -749,22 +768,23 @@ def resolve_and_build(
     sequence_base: int = 0,
     file_index: DataFrame | None = None,
     extra_symbols: DataFrame | None = None,
-    known_ids: DataFrame | None = None,
     checkpoint: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple:
     """Semantic resolution + ContextBlock/GraphEdge materialization.
 
     Resolution (S9 semantics): an edge's raw target name resolves to
-    (1) a unit in the same file whose bare name matches, else
-    (2) the unique unit with that bare name anywhere in the codebase.
-    Unresolved edges are dropped (the reference drops edges whose endpoints
-    don't exist, ``src/storage/engine.zig:1207-1217``).
+    (1) a unit in the same file whose bare name matches (the parse's
+    ``dst_local``), else (2) the unique unit with that bare name anywhere
+    in the codebase (one aggregation by bare name, one join). Unresolved
+    edges are dropped (the reference drops edges whose endpoints don't
+    exist, ``src/storage/engine.zig:1207-1217``). Edges are endpoint-valid
+    by construction: ``src`` is a unit of the edge's own file and ``dst``
+    the id of the symbol row resolved to; ``file_index`` must list every
+    parsed file, so both are batch blocks or ``extra_symbols`` rows.
 
     Incremental re-ingest (a subset of the codebase's files): pass
-    ``extra_symbols`` — DataFrame[file_path, bare, unit_id] for the
-    *unchanged* files (derivable from the store's visible blocks) so
-    cross-file targets resolve codebase-wide, and ``known_ids`` — visible
-    block ids — so edges into unchanged files survive the endpoint check.
+    ``extra_symbols`` — DataFrame[bare, unit_id, id] of the *unchanged*
+    files' visible blocks — so cross-file targets resolve codebase-wide.
 
     Edges carry provenance (codebase, src_file, ingest_seq=sequence_base):
     the storage layer's epoch rule uses it to shadow a re-ingested file's
@@ -779,10 +799,12 @@ def resolve_and_build(
     spans at least one source line).
 
     ``checkpoint=True`` evaluates the block batch once, eagerly
-    (localCheckpoint): the caller's block write, the edges' endpoint check
-    and any count over the batch then read that one evaluation instead of
-    re-running the per-file window each.
+    (localCheckpoint), and also returns what that evaluation observed:
+    ``(blocks, edges, {"lo", "hi", "ids"})`` — the least and greatest
+    sequence (None when empty) and the distinct block ids (a name defined
+    twice in a file is one id in two rows).
     """
+    from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
     if file_index is None:
@@ -793,6 +815,9 @@ def resolve_and_build(
             list(enumerate(paths)), "file_idx long, file_path string"
         )
     indexed = units.join(F.broadcast(file_index), "file_path")
+
+    def block_id(uid):
+        return F.md5(F.concat(F.lit(codebase), F.lit("/"), uid))
 
     uid = F.concat(F.col("file_path"), F.lit(":"), F.col("name"))
     in_file = F.row_number().over(
@@ -808,7 +833,7 @@ def resolve_and_build(
         ),
     ).otherwise(F.lit(""))
     blocks = indexed.select(
-        F.md5(F.concat(F.lit(codebase), F.lit("/"), uid)).alias("id"),
+        block_id(uid).alias("id"),
         seq.cast("bigint").alias("sequence"),
         F.concat(
             F.lit("file://"), F.col("file_path"), F.lit("#L"),
@@ -829,84 +854,51 @@ def resolve_and_build(
         "content",
     )
     if checkpoint:
-        blocks = blocks.localCheckpoint()
+        # an id repeats only within its file: the sequence window's
+        # partitioning serves this window too (a sort, no exchange)
+        first = F.row_number().over(
+            Window.partitionBy("file_path", "unit_id").orderBy("sequence")
+        ) == 1
+        batch = Observation()
+        blocks = blocks.withColumn("_first", first).observe(
+            batch, F.min("sequence").alias("lo"), F.max("sequence").alias("hi"),
+            F.count_if("_first").alias("ids"),
+        ).drop("_first").localCheckpoint()
 
-    # symbol table: bare name → qualified unit, per file and global. The
-    # per-file table needs only the batch's own files (every raw edge
-    # comes from one of them); the global one sees the whole codebase.
-    batch_syms = units.select(
-        "file_path",
-        F.element_at(F.split(F.col("name"), r"\."), -1).alias("bare"),
-        F.concat(F.col("file_path"), F.lit(":"), F.col("name")).alias("unit_id"),
+    # bare name -> the id of its unique defining unit (min == max); the
+    # batch's rows are its blocks (unit_id is "<file_path>:<name>")
+    name = F.expr("substring(unit_id, length(file_path) + 2)")
+    syms = blocks.select(
+        F.element_at(F.split(name, r"\."), -1).alias("bare"), "unit_id", "id"
     )
-    syms = batch_syms
     if extra_symbols is not None:
-        syms = syms.unionByName(
-            extra_symbols.select("file_path", "bare", "unit_id")
-        )
-    per_file = batch_syms.groupBy("file_path", "bare").agg(
-        F.min("unit_id").alias("uid_file")
-    )
-    # unique <=> min == max: one aggregation, where a distinct count
-    # would add a second shuffle
-    global_unique = (
+        syms = syms.unionByName(extra_symbols.select("bare", "unit_id", "id"))
+    # unique build-side names: blocks and raw_edges share one parse
+    # lineage, where attribute-based conditions mis-resolve (r12)
+    gu = (
         syms.groupBy("bare")
-        .agg(F.min("unit_id").alias("uid_global"), F.max("unit_id").alias("_hi"))
-        .where(F.col("uid_global") == F.col("_hi"))
-        .select("bare", "uid_global")
+        .agg(F.min(F.struct("unit_id", "id")).alias("_lo"), F.max("unit_id").alias("_hi"))
+        .where(F.col("_lo.unit_id") == F.col("_hi"))
+        .select(F.col("bare").alias("_gu_bare"), F.col("_lo.id").alias("_gu_id"))
     )
-
-    # JOIN CONDITIONS BY UNIQUE NAMES, not DataFrame attributes (r12): units
-    # and raw_edges are now filtered projections of ONE combined parse
-    # relation, so per_file/global_unique share their lineage with
-    # raw_edges — attribute-based conditions like
-    # ``raw_edges.file_path == per_file.file_path`` become common-lineage
-    # self-join references that Spark mis-resolves (observed: every edge
-    # resolved to NULL and was dropped). Renaming the build-side columns
-    # to unique names makes every reference unambiguous regardless of the
-    # caller's lineage (pinned by test_sync_registry + the ingest tests).
-    pf = per_file.select(
-        F.col("file_path").alias("_pf_fp"),
-        F.col("bare").alias("_pf_bare"),
-        "uid_file",
+    src = block_id(F.concat(F.col("file_path"), F.lit(":"), F.col("src_name")))
+    dst = F.coalesce(
+        block_id(F.concat(F.col("file_path"), F.lit(":"), F.col("dst_local"))),
+        F.col("_gu_id"),
     )
-    gu = global_unique.select(
-        F.col("bare").alias("_gu_bare"), "uid_global"
-    )
-    e = (
-        raw_edges.join(
-            pf,
-            (F.col("file_path") == F.col("_pf_fp"))
-            & (F.col("dst_name") == F.col("_pf_bare")),
-            "left",
-        )
-        .drop("_pf_fp", "_pf_bare")
-        .join(gu, F.col("dst_name") == F.col("_gu_bare"), "left")
-        .drop("_gu_bare")
-        .withColumn("dst_uid", F.coalesce(F.col("uid_file"), F.col("uid_global")))
-        .where(F.col("dst_uid").isNotNull())
-    )
-    edges = e.select(
-        F.md5(
-            F.concat(F.lit(codebase), F.lit("/"), F.col("file_path"), F.lit(":"), F.col("src_name"))
-        ).alias("src"),
-        F.md5(F.concat(F.lit(codebase), F.lit("/"), F.col("dst_uid"))).alias("dst"),
-        "edge_type",
-        F.lit(codebase).alias("codebase"),
-        F.col("file_path").alias("src_file"),
-        F.lit(sequence_base).cast("bigint").alias("ingest_seq"),
-    ).where(F.col("src") != F.col("dst"))
-
-    # endpoints must exist (put_edge contract); incremental re-ingest also
-    # admits endpoints already visible in the store
-    ids = blocks.select("id")
-    if known_ids is not None:
-        ids = ids.unionByName(known_ids.select(F.col(known_ids.columns[0]).alias("id")))
     edges = (
-        edges.join(ids, edges.src == ids.id, "left_semi")
-        .join(ids, edges.dst == ids.id, "left_semi")
+        raw_edges.join(gu, F.col("dst_name") == F.col("_gu_bare"), "left")
+        .select(
+            src.alias("src"),
+            dst.alias("dst"),
+            "edge_type",
+            F.lit(codebase).alias("codebase"),
+            F.col("file_path").alias("src_file"),
+            F.lit(sequence_base).cast("bigint").alias("ingest_seq"),
+        )
+        .where(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
     )
-    return blocks, edges
+    return (blocks, edges, batch.get) if checkpoint else (blocks, edges)
 
 
 def ingest_manifest(

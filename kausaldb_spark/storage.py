@@ -500,12 +500,14 @@ class BlockStore:
     # -- writes -------------------------------------------------------------
 
     def append_blocks(
-        self, blocks: DataFrame, resequence: bool = True, pin: bool = True
+        self, blocks: DataFrame, resequence: bool = True, pin: bool = True,
+        sequences: tuple[int | None, int | None] | None = None,
     ) -> int:
         """S1: append a batch. With ``resequence``, incoming sequences are
         shifted above the store's current max (write order = MVCC order).
-        Returns the new high-water sequence. The new mark is derived from
-        one aggregation over the *incoming batch* (not a store rescan).
+        Returns the new high-water sequence, derived from the batch's (min,
+        max) ``sequences`` when the caller knows them, else from one
+        aggregation over the *incoming batch* (not a store rescan).
 
         Crash ordering (VERDICT r4 §Wrong #5): the mark is RESERVED — persisted
         to the side-file *before* the data write. A crash between the two
@@ -528,9 +530,12 @@ class BlockStore:
         """
         with self._writer_lease():
             base = self.max_sequence()
+            pin = pin and sequences is None  # no agg, nothing to pin for
             pinned = blocks.persist() if pin else blocks
             try:
-                lo, hi = pinned.agg(F.min("sequence"), F.max("sequence")).collect()[0]
+                lo, hi = sequences or pinned.agg(
+                    F.min("sequence"), F.max("sequence")
+                ).collect()[0]
                 lo, hi = lo or 0, hi or 0
                 if resequence:
                     out = pinned.withColumn(
@@ -570,10 +575,10 @@ class BlockStore:
         100 TB shape (the id set outgrows any broadcast), but it shuffles
         the incoming edge relation twice. ``assume_endpoints_exist=True``
         skips it for relations that are endpoint-valid BY CONSTRUCTION
-        (re-materializing an existing store's ``visible_edges()``, or a
-        fixture already restricted to visible endpoints); parser output and
-        any user-supplied edges must keep the default — unresolved
-        references genuinely dangle there."""
+        (``resolve_and_build``'s edges, re-materializing an existing store's
+        ``visible_edges()``, or a fixture already restricted to visible
+        endpoints); raw parser output and any user-supplied edges must keep
+        the default — unresolved references genuinely dangle there."""
         for name, typ in (
             ("codebase", "string"), ("src_file", "string"), ("ingest_seq", "bigint")
         ):

@@ -137,9 +137,8 @@ def test_zig_ingest_of_reference_query_dir(spark, tmp_path_factory):
     assert {"traverse_outgoing", "traverse_incoming"} <= names, names
 
 
-def test_zig_method_qualification_and_imports(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("zigproj")
-    (root / "a.zig").write_text(
+ZIG_PROJ = {
+    "a.zig": (
         'const std = @import("std");\n'
         'const helper = @import("b.zig");\n'
         "pub const Counter = struct {\n"
@@ -158,8 +157,15 @@ def test_zig_method_qualification_and_imports(spark, tmp_path_factory):
         'test "counter increments" {\n'
         "    bump_twice();\n"
         "}\n"
-    )
-    (root / "b.zig").write_text("pub fn log_event() void {}\n")
+    ),
+    "b.zig": "pub fn log_event() void {}\n",
+}
+
+
+def test_zig_method_qualification_and_imports(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("zigproj")
+    for name, body in ZIG_PROJ.items():
+        (root / name).write_text(body)
     blocks, edges = ingest.ingest_directory(spark, str(root), "zp")
     units = {r["unit_id"]: r["unit_type"] for r in blocks.collect()}
     assert units["a.zig:Counter"] == "type"
@@ -177,6 +183,123 @@ def test_zig_method_qualification_and_imports(spark, tmp_path_factory):
         for r in callees.where(F.col("depth") == 1).join(blocks, "id").collect()
     }
     assert {"Counter.increment", "bump_twice"} <= callee_names, callee_names
+
+
+# nested class, module-level calls, an unresolved name, imports of missing
+# modules and a redefinition; `kept.py` is resolved first and then stands
+# for the unchanged files of an incremental re-ingest
+PY_PROJ = {
+    "kept.py": textwrap.dedent('''
+        class Base:
+            pass
+
+        def shared():
+            return helper()
+    '''),
+    "outer.py": textwrap.dedent('''
+        import os
+        import missing_module
+        from absent import thing
+
+        class Outer(Base):
+            class Inner:
+                def m(self):
+                    return helper() + undefined_name() + shared()
+            def run(self):
+                self.m()
+                return Outer.Inner()
+
+        def helper():
+            return os.path.join("a")
+
+        def helper():
+            return shared() + shared()
+
+        helper()
+        print(helper())
+    '''),
+}
+
+
+def _semi_joined_edges(units, raw_edges, codebase, base, extra, ids):
+    """Resolution with an endpoint check after it: per-file and global
+    symbol aggregates, two left joins, then both ends semi-joined against
+    ``ids`` (the batch's block ids and the kept ones)."""
+    bare = F.element_at(F.split(F.col("name"), r"\."), -1)
+    uid = F.concat(F.col("file_path"), F.lit(":"), F.col("name"))
+    batch_syms = units.select("file_path", bare.alias("bare"), uid.alias("unit_id"))
+    syms = batch_syms.unionByName(extra.select("file_path", "bare", "unit_id"))
+    pf = batch_syms.groupBy("file_path", "bare").agg(F.min("unit_id").alias("uid_file"))
+    gu = (
+        syms.groupBy("bare")
+        .agg(F.min("unit_id").alias("uid_global"), F.max("unit_id").alias("_hi"))
+        .where(F.col("uid_global") == F.col("_hi"))
+    )
+    pf = pf.select(F.col("file_path").alias("_fp"), F.col("bare").alias("_b1"), "uid_file")
+    gu = gu.select(F.col("bare").alias("_b2"), "uid_global")
+    e = (
+        raw_edges.join(pf, (F.col("file_path") == F.col("_fp")) & (F.col("dst_name") == F.col("_b1")), "left")
+        .join(gu, F.col("dst_name") == F.col("_b2"), "left")
+        .withColumn("dst_uid", F.coalesce("uid_file", "uid_global"))
+        .where(F.col("dst_uid").isNotNull())
+    )
+    md5 = lambda c: F.md5(F.concat(F.lit(codebase + "/"), c))  # noqa: E731
+    e = e.select(
+        md5(F.concat(F.col("file_path"), F.lit(":"), F.col("src_name"))).alias("src"),
+        md5(F.col("dst_uid")).alias("dst"),
+        "edge_type",
+        F.col("file_path").alias("src_file"),
+    ).where(F.col("src") != F.col("dst"))
+    return e.join(ids, e.src == ids.id, "left_semi").join(ids, e.dst == ids.id, "left_semi")
+
+
+@pytest.mark.parametrize("tree,kept", [(PY_PROJ, "kept.py"), (ZIG_PROJ, "b.zig")])
+def test_resolved_edges_are_endpoint_valid_by_construction(spark, tmp_path_factory, tree, kept):
+    """Every edge resolve_and_build returns leaves a block of its batch and
+    lands on a block of the batch or on a supplied kept block, with no
+    endpoint check after resolution; the edges are exactly those such a
+    check would have kept. The eagerly checkpointed batch reports its
+    sequence range and its distinct block ids (a redefinition is one id in
+    two rows)."""
+    root = tmp_path_factory.mktemp("endpoints")
+    for name, body in tree.items():
+        (root / name).write_text(body)
+
+    def parse(rel):
+        return ingest.parse_files(spark, [(str(root / rel), rel)], materialize=True)
+
+    kept_blocks, _ = ingest.resolve_and_build(*parse(kept), "cb", 0)
+    extra = kept_blocks.select(
+        "file_path",
+        F.element_at(F.split(F.element_at(F.split("unit_id", ":"), -1), r"\."), -1).alias("bare"),
+        "unit_id", "id",
+    )
+    batch_files = sorted(set(tree) - {kept})
+    units, raw_edges = ingest.parse_files(
+        spark, [(str(root / rel), rel) for rel in batch_files], materialize=True
+    )
+    file_index = spark.createDataFrame(list(enumerate(batch_files)), "file_idx long, file_path string")
+    blocks, edges, batch = ingest.resolve_and_build(
+        units, raw_edges, "cb", 5_000_000, file_index,
+        extra_symbols=extra, checkpoint=True,
+    )
+
+    batch_ids = {r["id"] for r in blocks.collect()}
+    kept_ids = {r["id"] for r in extra.collect()}
+    got = sorted(tuple(r) for r in edges.select("src", "dst", "edge_type", "src_file").collect())
+    assert got, "the trees have resolvable references"
+    assert all(src in batch_ids for src, *_ in got)
+    assert all(dst in batch_ids | kept_ids for _, dst, *_ in got)
+    assert any(dst in kept_ids for _, dst, *_ in got), "a reference into a kept file"
+
+    ids = blocks.select("id").unionByName(extra.select("id"))
+    want = sorted(
+        tuple(r) for r in _semi_joined_edges(units, raw_edges, "cb", 5_000_000, extra, ids).collect()
+    )
+    assert got == want
+
+    seqs = [r["sequence"] for r in blocks.collect()]
+    assert batch == {"lo": min(seqs), "hi": max(seqs), "ids": len(batch_ids)}
 
 
 def test_discovery_exclude_patterns(spark, tmp_path_factory):

@@ -262,6 +262,9 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         ("add", "f4.py", "def e4():\n    return a0()\n"),
         ("mod", "f2.py", "def c2():\n    return 42\n\ndef c2b():\n    return a0()\n"),
         ("del", "f1.py", None),
+        # one id in two rows of the batch, two identical edge rows
+        ("add", "f5.py",
+         "def g5():\n    return 1\n\n\ndef g5():\n    return c2() + c2()\n"),
     ]
 
     for i, (action, name, body) in enumerate(edit_script):
@@ -289,38 +292,41 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
         shutil.rmtree(fresh_store, ignore_errors=True)
 
 
-# Spark jobs a one-file body-edit sync of the `proj` tree may start: this
-# code runs 47 (4 and 8 cores alike); the ceiling leaves a little room for
-# the planner's runtime choices. Before the sync shared one leased codebase
-# view and an exact affected-name set and read tables with pinned schemas,
-# the same sync ran 98.
-SYNC_JOB_CEILING = 50
+# Spark jobs a one-file body-edit sync of the `proj` tree may start, on
+# 4 and 8 cores alike: 29 for the first sync after the link and 32 for a
+# second one, whose store already holds a tombstone batch. Before the sync
+# counted itself (edges written without endpoint joins, counts observed on
+# the commit's own writes, no sequence aggregates), they ran 47 and 52.
+SYNC_JOB_CEILING = 32
 
 
 def test_body_edit_sync_job_ceiling(spark, proj, tmp_path_factory):
     """A body-only edit changes no definition, so the sync re-resolves no
     unchanged file; its Spark jobs, counted under a job group, stay under
-    the ceiling, and the counts it returns match a whole-store recount."""
+    the ceiling, and the counts it returns match a whole-store recount. A
+    second body-edit sync, over a store that now holds tombstones, stays
+    under the same ceiling."""
     store = str(tmp_path_factory.mktemp("jobs_store"))
     eng = KausalEngine(spark, store)
     eng.link_codebase(str(proj), "cb")
-    (proj / "b.py").write_text(B_PY_V2)
 
-    with spark_jobs(spark, "body-edit-sync") as run:
-        stats = eng.sync_codebase("cb")
-    jobs = len(run["jobs"])
+    for body in (B_PY_V2, B_PY_V1):
+        (proj / "b.py").write_text(body)
+        with spark_jobs(spark, "body-edit-sync") as run:
+            stats = eng.sync_codebase("cb")
+        jobs = len(run["jobs"])
 
-    assert stats["files_changed"] == 1 and stats["files_reresolved"] == 0, stats
-    assert jobs <= SYNC_JOB_CEILING, jobs
-    counts = eng._codebase_counts("cb")
-    assert {k: stats[k] for k in counts} == counts
+        assert stats["files_changed"] == 1 and stats["files_reresolved"] == 0, stats
+        assert jobs <= SYNC_JOB_CEILING, jobs
+        counts = eng._codebase_counts("cb")
+        assert {k: stats[k] for k in counts} == counts
 
 
-# Spark jobs a fresh link of the `proj` tree may start. A link keeps no
-# stored file, so it pays none of a sync's reads of the old state: it runs
-# 34 (4 cores), one more than the 33 of the link's former write path, for
-# the collect of the file hashes that a sync diffs against.
-LINK_JOB_CEILING = 34
+# Spark jobs a fresh link of the `proj` tree may start: 16 on 4 and 8
+# cores. A link keeps no stored file, so it pays none of a sync's reads of
+# the old state, and its counts are observed on its own writes; before
+# that it ran 34.
+LINK_JOB_CEILING = 16
 
 
 def test_fresh_link_job_ceiling(spark, proj, tmp_path_factory):
@@ -337,6 +343,26 @@ def test_fresh_link_job_ceiling(spark, proj, tmp_path_factory):
     assert stats["files_changed"] == 3 and stats["files_unchanged"] == 0, stats
     counts = eng._codebase_counts("cb")
     assert {k: stats[k] for k in counts} == counts
+
+
+def test_sync_counts_stay_exact_after_a_block_delete(spark, proj, tmp_path_factory):
+    """A block deleted between syncs leaves the registry's last counts
+    stale; the next sync still returns and registers exact counts, read
+    from the store as it is: the kept file lost a block, and the edge into
+    it is no longer visible."""
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("delete_store")))
+    eng.link_codebase(str(proj), "cb")
+    util = eng.find_by_name("cb", "function", "util").collect()[0]["id"]
+    eng.delete_blocks([util])
+    (proj / "b.py").write_text(B_PY_V2)
+
+    stats = eng.sync_codebase("cb")
+
+    counts = eng._codebase_counts("cb")
+    assert counts == {"blocks": 2, "edges": 0}
+    assert {k: stats[k] for k in counts} == counts, stats
+    reg = eng.registry()["cb"]
+    assert {"blocks": reg["block_count"], "edges": reg["edge_count"]} == counts
 
 
 def test_relink_equals_fresh_link(spark, proj, tmp_path_factory):

@@ -3,20 +3,30 @@
 Usage:
     python tools/ab_interleave.py --rev <git-rev> --keys k1,k2 [--passes 3]
                                   [--label name]
+    python tools/ab_interleave.py --rev <git-rev> --workload edit_sync
+                                  --seeds 11-20 [--label name]
 
 Why (r12 verdict item 1): cross-day medians on this host are contaminated
 by CPU-steal waves, so a single bench run cannot adjudicate "regression vs
-noise". This tool runs the SAME key subset against HEAD and against a
-worktree of the prior rev in strict alternation (A B B A A B ... balanced
-order), each pass a fresh `bench.py` process with BENCH_RUNS=1, and stamps
-every pass with loadavg + /proc/stat steal delta. A real code regression
-shows up in EVERY pass regardless of which box-window it landed in; a wave
-inflates whichever side happened to run inside it and averages out across
-the interleave.
+noise". This tool runs the SAME work against HEAD (the working tree) and
+against an export of the prior rev (``git archive`` into ``--workdir``) in
+strict alternation, each run a fresh process, and stamps every run with
+its CPU steal. A real code regression shows up in EVERY pair regardless of
+which box-window it landed in; a wave inflates whichever side happened to
+run inside it and averages out across the interleave.
 
-Writes bench_records/AB_<label>.json:
+``--keys`` mode runs ``bench.py`` with BENCH_RUNS=1 on the given keys, A B
+B A ... over ``--passes``, and writes bench_records/AB_<label>.json:
     {"rev": ..., "keys": [...], "passes": {"head": [{...timings, box}],
      "prev": [...]}, "medians": {...}, "ratio": {key: head/prev}}
+
+``--workload`` mode runs the end-to-end benchmark
+(``benchmark/run.py --trace 0`` with BENCHMARK.json's ``run_seconds``) once
+per seed on each side; the side that runs first alternates from one seed to
+the next. bench_records/AB_<label>.json then holds every pair (each side's
+end-to-end metrics, failed/attempted, CPU steal, exit code) and, per
+end-to-end metric of BENCHMARK.json, each side's median and quartiles and
+the number of pairs in which the change (HEAD) was better.
 """
 
 from __future__ import annotations
@@ -27,6 +37,7 @@ import os
 import statistics
 import subprocess
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -71,20 +82,125 @@ def _run_bench(repo_dir: str, keys: str) -> dict:
     return rec
 
 
+def _checkout(rev: str, workdir: str) -> str:
+    """An export of ``rev`` (its committed files) under ``workdir``."""
+    dest = os.path.join(workdir, f"kdb_ab_{rev[:12].replace('/', '_')}")
+    if not os.path.isdir(dest):
+        archive = subprocess.run(
+            ["git", "archive", rev], cwd=REPO, check=True, capture_output=True
+        ).stdout
+        os.makedirs(dest)
+        subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+    return dest
+
+
+def _seeds(spec: str) -> list[int]:
+    """'11-20' or '11,13,17' -> seed list."""
+    out: list[int] = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        out += list(range(int(lo), int(hi or lo) + 1))
+    return out
+
+
+def _run_e2e(repo_dir: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced benchmark/run.py; its result line, box line and steal."""
+    s0 = _steal()
+    proc = subprocess.run(
+        [sys.executable, "benchmark/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        cwd=repo_dir, capture_output=True, text=True, timeout=3600,
+    )
+    rec: dict = {"rc": proc.returncode, "steal_s": round((_steal() - s0) / 100.0, 1)}
+    lines = proc.stdout.strip().splitlines()
+    try:
+        result = json.loads(lines[-1])
+        rec.update(
+            metrics={k: v["value"] for k, v in result["metrics"].items()},
+            failed=result["failed"], attempted=result["attempted"],
+        )
+        rec["box"] = json.loads(lines[0])["box"]
+    except (IndexError, KeyError, ValueError):
+        rec["stderr_tail"] = proc.stderr[-500:]
+    return rec
+
+
+def _quartiles(vals: list[float]) -> dict:
+    if len(vals) < 2:
+        vals = vals * 2
+    q1, med, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+    return {"median": round(med, 3), "q1": round(q1, 3), "q3": round(q3, 3)}
+
+
+def _e2e_main(args) -> None:
+    with open(os.path.join(REPO, "BENCHMARK.json"), encoding="utf-8") as fh:
+        spec = json.load(fh)
+    prev_dir = _checkout(args.rev, args.workdir)
+    pairs = []
+    for i, seed in enumerate(_seeds(args.seeds)):
+        order = ["change", "parent"] if i % 2 == 0 else ["parent", "change"]
+        pair = {"seed": seed, "first": order[0]}
+        for side in order:
+            pair[side] = _run_e2e(
+                REPO if side == "change" else prev_dir,
+                args.workload, seed, spec["run_seconds"],
+            )
+            print(f"seed {seed} {side}: {pair[side].get('metrics')} "
+                  f"failed={pair[side].get('failed')} steal={pair[side]['steal_s']}",
+                  flush=True)
+        pairs.append(pair)
+
+    summary = {}
+    for m in spec["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        both = [
+            (p["parent"]["metrics"][name], p["change"]["metrics"][name])
+            for p in pairs if "metrics" in p["parent"] and "metrics" in p["change"]
+        ]
+        if not both:
+            continue
+        summary[name] = {
+            "parent": _quartiles([a for a, _ in both]),
+            "change": _quartiles([b for _, b in both]),
+            "change_wins": sum((b < a) if lower else (b > a) for a, b in both),
+            "pairs": len(both),
+        }
+    for side in ("parent", "change"):
+        runs = [p[side] for p in pairs]
+        summary[f"error_rate.{side}"] = round(
+            sum(r.get("failed", 0) for r in runs)
+            / max(1, sum(r.get("attempted", 0) for r in runs)), 4)
+        summary[f"broken_runs.{side}"] = sum("metrics" not in r for r in runs)
+
+    label = args.label or f"{args.workload}_{args.rev[:12]}"
+    out_path = os.path.join(REPO, "bench_records", f"AB_{label}.json")
+    os.makedirs(os.path.dirname(out_path), exist_ok=True)
+    with open(out_path, "w", encoding="utf-8") as fh:
+        json.dump({"rev": args.rev, "workload": args.workload, "pairs": pairs,
+                   "summary": summary}, fh, indent=1)
+        fh.write("\n")
+    print(f"wrote {out_path}")
+    print(json.dumps(summary))
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rev", required=True)
-    ap.add_argument("--keys", required=True)
+    mode = ap.add_mutually_exclusive_group(required=True)
+    mode.add_argument("--keys")
+    mode.add_argument("--workload", choices=("edit_sync", "curate"))
+    ap.add_argument("--seeds", help="with --workload: e.g. 11-20")
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--label", default=None)
+    ap.add_argument("--workdir", default=tempfile.gettempdir())
     args = ap.parse_args()
+    if args.workload:
+        if not args.seeds:
+            ap.error("--workload needs --seeds")
+        _e2e_main(args)
+        return
 
-    wt = f"/tmp/kdb_ab_{args.rev[:12].replace('/', '_')}"
-    if not os.path.isdir(wt):
-        subprocess.run(
-            ["git", "worktree", "add", "--detach", wt, args.rev],
-            cwd=REPO, check=True,
-        )
+    wt = _checkout(args.rev, args.workdir)
 
     passes: dict[str, list[dict]] = {"head": [], "prev": []}
     # balanced alternation: pass i runs (head, prev) on even i, (prev, head)
