@@ -2,14 +2,28 @@
 (``src/kausaldb.zig:29-45``), with query statistics (X4) and a result cache
 (X1).
 
+Every answer runs once, when the call is made: it is collected through
+Arrow (``DataFrame.toArrow``) and handed back as a DataFrame over those rows
+(``createDataFrame(table, schema)``, a local relation, so reading, filtering
+or limiting it starts no Spark job).
+
 Cache semantics (``src/query/cache.zig:26-103,181-346``): LRU + TTL keyed by
-the query signature; invalidate-all on any mutation. Here a cache entry holds
-a *materialized* (localCheckpoint-ed) DataFrame — the Spark analogue of the
-reference caching fully-owned result blocks.
+the query signature, holding owned result rows, as the reference does: an
+entry is the answer's Arrow table. The reference drops every entry on any
+mutation; here the cache records the store's high-water mark
+(``BlockStore.max_sequence``) it was filled at and empties itself when the
+mark moves. Every block or tombstone write reserves a new mark before it
+touches a data file, whichever engine or process makes it, so no write path
+has to remember to invalidate. ``compact`` keeps the mark and the visible
+set, and cached rows read no files, so the version root is not part of the
+key. Every keyed answer is bounded by the reference's own limits (find
+1,000, keyword 500, traverse 10,000, trace 100 paths; a ranked search by
+its k), and so is every uncached one (filter 10,000).
 
 Statistics (``src/query/engine.zig:66-131``): per-type counters + latency —
-kept driver-side (cheap, exact); executor-side metrics (rows scanned,
-shuffle bytes) come from Spark's own listeners and are surfaced by bench.py.
+kept driver-side (cheap, exact); a call's latency includes running it. A
+``with_stats`` query also counts its answer's rows and, for a filter, the
+visible blocks its scan read; both land before the call returns.
 """
 
 from __future__ import annotations
@@ -32,9 +46,6 @@ from kausaldb_spark.storage import BlockStore
 
 CACHE_MAX_ENTRIES = 1000   # src/query/cache.zig defaults
 CACHE_TTL_SEC = 30 * 60
-# observation pairs retained while waiting for the caller's action; beyond
-# this, the oldest (likely abandoned) instrumented queries are dropped
-_PENDING_OBS_MAX = 256
 
 # Workspace registry lives IN the store as a config block with a fixed id —
 # the reference's exact pattern (deterministic metadata BlockId 0x111...1 +
@@ -69,8 +80,8 @@ class QueryStats:
     # X4 scan/match parity (r6): the reference reports blocks_scanned +
     # matches per filtered query (src/query/filtering.zig:199-296) and
     # storage read counters (src/query/engine.zig:66-131). Fed by the
-    # observe()-instrumented query variants — see KausalEngine.filtered /
-    # traverse(with_stats=True).
+    # with_stats=True query variants — see KausalEngine.filtered /
+    # traverse.
     rows_scanned: int = 0
     rows_matched: int = 0
     started_at: float = field(default_factory=time.monotonic)
@@ -97,23 +108,31 @@ class KausalEngine:
         self.spark = spark
         self.store = BlockStore(spark, store_path)
         self.stats = QueryStats()
-        self._cache: OrderedDict[tuple, tuple[float, DataFrame]] = OrderedDict()
-        # (scan_obs | None, match_obs | None) per stats-instrumented query,
-        # harvested lazily by status() once the caller has run an action
-        self._pending_obs: list[tuple] = []
+        # key -> (filled at, Arrow table, schema), all of store mark _cache_mark
+        self._cache: OrderedDict[tuple, tuple] = OrderedDict()
+        self._cache_mark: int | None = None
+        # (mark, content) of this engine's last registry write
+        self._registry_written: tuple[int | None, str] = (None, "")
 
     # -- workspace registry (src/workspace/manager.zig:38-54,113-187) -------
 
     def registry(self) -> dict[str, dict]:
         """Per-codebase link metadata: {name: {path, linked_at, last_sync_at,
-        block_count, edge_count}} from the workspace-config block."""
-        rows = lk.find_block(
-            self.store.visible(REGISTRY_CODEBASE), REGISTRY_BLOCK_ID
-        ).select("content").collect()
-        if not rows:
-            return {}
+        block_count, edge_count}} from the workspace-config block. While
+        the store's mark is the one this engine's last registry write
+        returned, the block holds what that write wrote (it held the writer
+        lease, so no other write landed in between), and no store read
+        runs; each call returns a fresh dict."""
+        mark, content = self._registry_written
+        if mark != self.store.max_sequence():
+            rows = lk.find_block(
+                self.store.visible(REGISTRY_CODEBASE), REGISTRY_BLOCK_ID
+            ).select("content").collect()
+            if not rows:
+                return {}
+            content = rows[0][0]
         try:
-            return json.loads(rows[0][0]).get("codebases", {})
+            return json.loads(content).get("codebases", {})
         except (ValueError, AttributeError):
             return {}
 
@@ -130,12 +149,8 @@ class KausalEngine:
             " metadata_json string, content string",
         )
         # resequence → last-writer-wins; a literal row's range is known
-        self.store.append_blocks(block, sequences=(0, 0))
-        # the registry lives IN the store as a block: rewriting it is a
-        # mutation like any other, so the result cache must drop (a cached
-        # keyword_search can otherwise serve the pre-write registry block
-        # for the TTL — the no-op-sync path hit exactly this)
-        self._invalidate()
+        mark = self.store.append_blocks(block, sequences=(0, 0))
+        self._registry_written = (mark, content)
 
     def list_codebases(self) -> list[dict]:
         """`kausal list`: what is linked, since when, how big
@@ -190,7 +205,8 @@ class KausalEngine:
         pf = local_frame(self.spark, [(p,) for p in paths], f"{col} string")
         return df.join(F.broadcast(pf), col, "left_semi" if keep else "left_anti")
 
-    # -- mutations (invalidate cache, reference src/query/engine.zig:493-502)
+    # -- mutations (each moves the store's mark, which empties the result
+    # cache: the reference invalidates on mutation, src/query/engine.zig:493-502)
 
     def link_codebase(self, root: str, codebase: str) -> dict[str, int]:
         """The CLI `link` flow (§3.3): a sync that re-ingests every file.
@@ -548,38 +564,42 @@ class KausalEngine:
         if codebase in reg:
             del reg[codebase]
             self._save_registry(reg)
-        self._invalidate()
         return n
 
     def put_blocks(self, blocks: DataFrame) -> int:
-        hi = self.store.append_blocks(blocks)
-        self._invalidate()
-        return hi
+        return self.store.append_blocks(blocks)
 
     def delete_blocks(self, block_ids: list[str]) -> None:
         self.store.delete_blocks(block_ids)
-        self._invalidate()
 
     # -- queries ------------------------------------------------------------
 
-    def _timed(self, qtype: str, key: tuple | None, build) -> DataFrame:
-        if key is not None:
-            hit = self._cache_get(key)
-            if hit is not None:
-                self.stats.cache_hits += 1
-                # a hit IS a served query: the per-type counters / QPS /
-                # latency must include it (reference counts every query,
-                # engine.zig:66-131) — its latency is the O(1) lookup
-                self.stats.record(qtype, 0)
-                return hit
-            self.stats.cache_misses += 1
-        t0 = time.monotonic_ns()
-        df = build()
-        if key is not None:
-            df = df.localCheckpoint(eager=True)
-            self._cache_put(key, df)
-        self.stats.record(qtype, time.monotonic_ns() - t0)
-        return df
+    def _timed(
+        self, qtype: str, key: tuple | None, build, with_stats: bool = False
+    ) -> DataFrame:
+        """Answer with ``build()``'s rows, collected once through Arrow and
+        returned as a local DataFrame; a keyed answer is served from, or
+        kept in, the cache. ``with_stats`` counts the answer's rows."""
+        hit = None if key is None else self._cache_get(key)
+        if hit is not None:
+            self.stats.cache_hits += 1
+            # a hit IS a served query: the per-type counters / QPS /
+            # latency must include it (reference counts every query,
+            # engine.zig:66-131) — its latency is the O(1) lookup
+            self.stats.record(qtype, 0)
+            table, schema = hit
+        else:
+            if key is not None:
+                self.stats.cache_misses += 1
+            t0 = time.monotonic_ns()
+            df = build()
+            table, schema = df.toArrow(), df.schema
+            if key is not None:
+                self._cache_put(key, table, schema)
+            self.stats.record(qtype, time.monotonic_ns() - t0)
+        if with_stats:
+            self.stats.rows_matched += table.num_rows
+        return self.spark.createDataFrame(table, schema)
 
     def find_block(self, block_id: str) -> DataFrame:
         # visible(), not snapshot(): an id predicate commutes with the MVCC
@@ -637,33 +657,27 @@ class KausalEngine:
         self, expr: flt.Expr, offset: int = 0, max_results: int = 10_000,
         with_stats: bool = False,
     ) -> DataFrame:
-        """F1-F5. ``with_stats=True`` instruments the query with observe()
-        counters: rows_scanned = visible blocks examined (the reference's
-        blocks_scanned — its filter loop walks every visible block,
-        src/query/filtering.zig:199-296), rows_matched = rows out. Both
-        paths scan the persisted snapshot (BlockStore.snapshot: a filter
-        predicate cannot pass the MVCC aggregate, so parquet pushdown buys
-        nothing); the scan-side count is taken above that scan, which is
-        precisely the reference's own cost model. Counters land in
-        stats/status() after the caller runs an action (observe adds no
-        extra job)."""
-        if not with_stats:
-            return self._timed(
-                "filtered", None,
-                lambda: flt.filtered_query(self.store.snapshot(), expr, offset, max_results),
-            )
-        def build():
-            o_scan, o_match = Observation(), Observation()
-            vis = self.store.snapshot().observe(
-                o_scan, F.count(F.lit(1)).alias("rows_scanned")
-            )
-            out = flt.filtered_query(vis, expr, offset, max_results).observe(
-                o_match, F.count(F.lit(1)).alias("rows_matched")
-            )
-            self._pending_obs.append((o_scan, o_match))
-            return out
+        """F1-F5. ``with_stats=True`` also counts: rows_scanned = visible
+        blocks examined (the reference's blocks_scanned — its filter loop
+        walks every visible block, src/query/filtering.zig:199-296),
+        rows_matched = rows out. Both paths scan the persisted snapshot
+        (BlockStore.snapshot: a filter predicate cannot pass the MVCC
+        aggregate, so parquet pushdown buys nothing); the scan-side count is
+        an observe() on that scan (no extra job), which is precisely the
+        reference's own cost model. Counters land in stats/status() when the
+        call returns."""
+        scan = Observation()
 
-        return self._timed("filtered", None, build)
+        def build():
+            vis = self.store.snapshot()
+            if with_stats:
+                vis = vis.observe(scan, F.count(F.lit(1)).alias("n"))
+            return flt.filtered_query(vis, expr, offset, max_results)
+
+        out = self._timed("filtered", None, build, with_stats)
+        if with_stats:
+            self.stats.rows_scanned += scan.get["n"]
+        return out
 
     def traverse(
         self,
@@ -676,12 +690,11 @@ class KausalEngine:
         with_stats: bool = False,
     ) -> DataFrame:
         """T1/T9/T10: traversal joined back to visible blocks (+ optional
-        workspace filter, reference F7). ``with_stats=True`` adds an
-        observe() counter for rows_matched (result rows after the
-        workspace filter) — the frontier expansion itself runs eager
-        per-level jobs whose visited-set size the traversal caps already
-        bound, so the result counter is the honest per-query stat; it
-        lands in stats/status() after the caller's action."""
+        workspace filter, reference F7). ``with_stats=True`` adds the
+        result rows (after the workspace filter) to rows_matched — the
+        frontier expansion itself runs eager per-level jobs whose
+        visited-set size the traversal caps already bound, so the result
+        count is the honest per-query stat."""
 
         def build():
             # the persisted session views (snapshot/edges_snapshot), not the
@@ -697,18 +710,13 @@ class KausalEngine:
             out = reached.join(self.store.snapshot(), "id")
             if workspace:
                 out = out.where(out.codebase == workspace)
-            out = out.select(*(c for c, _ in _TRAVERSE_COLS))
-            if with_stats:
-                o_match = Observation()
-                out = out.observe(o_match, F.count(F.lit(1)).alias("rows_matched"))
-                self._pending_obs.append((None, o_match))
-            return out
+            return out.select(*(c for c, _ in _TRAVERSE_COLS))
 
-        key = None if with_stats else (
+        key = (
             "traverse", tuple(sorted(start_ids)), direction, edge_filter,
             max_depth, max_results, workspace,
         )
-        return self._timed("traverse", key, build)
+        return self._timed("traverse", key, build, with_stats)
 
     def _no_anchor(self) -> DataFrame:
         """The answer to a callers/callees/references request whose name
@@ -789,36 +797,7 @@ class KausalEngine:
         self.store.visible_edges().createOrReplaceTempView(f"{prefix}_edges")
         self.store.blocks_raw().createOrReplaceTempView(f"{prefix}_blocks_raw")
 
-    def _drain_observations(self) -> None:
-        """Harvest completed observe() counters into stats. An Observation
-        is ready only after the caller ran an action on the instrumented
-        DataFrame; unready ones stay pending (getOrEmpty throws pre-action
-        — treated as not-ready, never blocks)."""
-        still = []
-        for o_scan, o_match in self._pending_obs:
-            try:
-                vals = {}
-                for o in (o_scan, o_match):
-                    if o is None:
-                        continue
-                    jm = o._jo.getOrEmpty()  # throws until the action ran
-                    if jm.isEmpty():
-                        raise LookupError("not ready")
-                    vals.update(o.get)  # instant once ready
-            except Exception:  # noqa: BLE001 — not ready yet
-                still.append((o_scan, o_match))
-                continue
-            self.stats.rows_scanned += int(vals.get("rows_scanned", 0))
-            self.stats.rows_matched += int(vals.get("rows_matched", 0))
-        # bound the retained tail: a caller that abandons instrumented
-        # DataFrames without ever running an action would otherwise grow
-        # this list (and the per-status JVM round-trips) without limit —
-        # keep the newest window, silently dropping stats for abandoned
-        # queries (they contributed no counters anyway)
-        self._pending_obs = still[-_PENDING_OBS_MAX:]
-
     def status(self) -> dict:
-        self._drain_observations()
         return {
             "blocks_visible": self.store.snapshot().count(),
             # the visible_edges view, not raw edges(): epoch-shadowed and
@@ -842,21 +821,24 @@ class KausalEngine:
     # -- cache plumbing -----------------------------------------------------
 
     def _cache_get(self, key: tuple):
+        """``key``'s (Arrow table, schema), or None on a miss. The entries
+        all belong to one store mark; once the mark moves, they go."""
+        mark = self.store.max_sequence()
+        if mark != self._cache_mark:
+            self._cache.clear()
+            self._cache_mark = mark
         ent = self._cache.get(key)
         if ent is None:
             return None
-        ts, df = ent
+        ts, table, schema = ent
         if time.monotonic() - ts > CACHE_TTL_SEC:
             del self._cache[key]
             return None
         self._cache.move_to_end(key)
-        return df
+        return table, schema
 
-    def _cache_put(self, key: tuple, df: DataFrame) -> None:
-        self._cache[key] = (time.monotonic(), df)
+    def _cache_put(self, key: tuple, table, schema) -> None:
+        self._cache[key] = (time.monotonic(), table, schema)
         self._cache.move_to_end(key)
         while len(self._cache) > CACHE_MAX_ENTRIES:
             self._cache.popitem(last=False)
-
-    def _invalidate(self) -> None:
-        self._cache.clear()

@@ -41,10 +41,15 @@ TREE = {
     """,
 }
 
-# jobs of a depth-4 trace on warm snapshots: two anchor lookups (a lookup
-# and the read of its cached answer each), one successor lookup per level,
-# the checkpoint of the cached answer and its read
-TRACE_JOB_CEILING = 10
+# Spark jobs of reads on warm snapshots with the answer cache empty, on 4
+# and 8 cores. An answer is collected once, through Arrow, and read back as
+# a local relation: a name lookup is one job, and the same lookup again
+# none. `show callers` runs 5: its anchor lookup and 4 for the one-level
+# traversal and the join of its answer to the blocks. A depth-4 trace runs
+# 7: two anchor lookups, one successor lookup per level and the read of the
+# driver-built path frame.
+SHOW_CALLERS_JOBS = 5
+TRACE_JOB_CEILING = 7
 
 
 @pytest.fixture(scope="module")
@@ -58,16 +63,26 @@ def engine(spark, tmp_path_factory):
 
 
 def test_reads_on_warm_snapshots(spark, engine):
-    """With both snapshots filled, a name lookup that finds nothing is one
-    job, a depth-4 trace stays under its ceiling, a filter launches at most
-    one task per core, and status() counts what visible() counts."""
+    """With both snapshots filled and the answer cache empty, a name lookup
+    that finds nothing is one job and the same lookup again none, `show
+    callers` runs its pinned jobs, a depth-4 trace stays under its ceiling,
+    a filter is one job that runs at most one task per core in each stage,
+    and status() counts what visible() counts."""
     engine.store.snapshot().count()
     engine.store.edges_snapshot().count()
-    engine._invalidate()
+    engine._cache.clear()
 
     with spark_jobs(spark, "find-miss") as find:
         engine.find_by_name("w", "function", "no_such_name")
     assert len(find["jobs"]) == 1, find
+    with spark_jobs(spark, "find-again") as again:
+        assert engine.find_by_name("w", "function", "no_such_name").collect() == []
+    assert again["jobs"] == [], again
+
+    with spark_jobs(spark, "show-callers") as show:
+        callers = engine.find_callers("w", "step2").limit(1000).collect()
+    assert sorted(r["unit_id"] for r in callers) == ["b.py:side", "b.py:step1"]
+    assert len(show["jobs"]) == SHOW_CALLERS_JOBS, show
 
     with spark_jobs(spark, "trace") as trace:
         paths = engine.trace_paths("w", "entry", "leaf", max_depth=4).collect()
@@ -78,7 +93,10 @@ def test_reads_on_warm_snapshots(spark, engine):
     with spark_jobs(spark, "filter") as filt:
         rows = engine.filtered(expr).collect()
     assert len(rows) == 6
-    assert 0 < filt["tasks"] <= spark.sparkContext.defaultParallelism, filt
+    # one job: its scan runs one task per core, and collecting the answer
+    # through Arrow merges the per-partition top-k in a one-task stage
+    assert len(filt["jobs"]) == 1, filt
+    assert 0 < max(filt["stage_tasks"]) <= spark.sparkContext.defaultParallelism, filt
 
     st = engine.status()
     assert st["blocks_visible"] == engine.store.visible().count()

@@ -82,7 +82,7 @@ def test_trace_paths(engine):
 def test_cache_ttl_expiry(engine, monkeypatch):
     import kausaldb_spark.engine as eng_mod
 
-    engine._invalidate()
+    engine._cache.clear()
     engine.find_by_name("proj", "function", "main")
     m0 = engine.stats.cache_misses
     # age every entry past the TTL
@@ -267,9 +267,10 @@ def test_edge_endpoint_enforcement(spark, tmp_path_factory):
 
 
 def test_scan_match_stats_advance(spark, tmp_path_factory):
-    """X4 scan/match parity (r6): with_stats=True queries feed observe()
-    counters that surface in status() after the caller's action; the
-    default path stays uninstrumented (pushdown preserved)."""
+    """X4 scan/match parity (r6): with_stats=True queries count the visible
+    blocks a filter scanned and the rows each answer holds; the counters
+    land in status() when the call returns, before the caller reads the
+    answer. Queries without the flag count nothing."""
     import textwrap
 
     from kausaldb_spark.operators import filtering as flt
@@ -292,9 +293,9 @@ def test_scan_match_stats_advance(spark, tmp_path_factory):
 
     expr = flt.Expr.cond(flt.TARGET_CONTENT, "contains", "helper_function")
     df = eng.filtered(expr, with_stats=True)
-    n_match = df.count()  # the caller's action completes the observation
+    st1 = eng.status()  # before any action on the answer
+    n_match = df.count()
     assert n_match >= 1
-    st1 = eng.status()
     assert st1["rows_scanned"] == n_vis  # reference semantics: full scan
     assert st1["rows_matched"] == n_match
 
@@ -303,16 +304,19 @@ def test_scan_match_stats_advance(spark, tmp_path_factory):
     t = eng.traverse(anchors, tv.INCOMING,
                      tv.EdgeFilter.include("calls", "calls_method"),
                      max_depth=1, workspace="proj", with_stats=True)
+    st2 = eng.status()
     n_t = t.count()
     assert n_t >= 1
-    st2 = eng.status()
     assert st2["rows_matched"] == n_match + n_t
     assert st2["rows_scanned"] == n_vis
 
-    # a pending (never-executed) instrumented query doesn't wedge status()
+    # counters land when the call returns, whether or not the caller ever
+    # reads the answer; a query without the flag counts nothing
     eng.filtered(expr, with_stats=True)
+    eng.filtered(expr)
     st3 = eng.status()
-    assert st3["rows_matched"] == n_match + n_t
+    assert st3["rows_matched"] == 2 * n_match + n_t
+    assert st3["rows_scanned"] == 2 * n_vis
 
 
 def test_ranked_search_cli(engine):

@@ -10,7 +10,9 @@ files' blocks — the monorepo-scale behavior the reference's last_sync
 tracking points toward.
 """
 
+import json
 import textwrap
+import time
 
 import pytest
 from conftest import spark_jobs
@@ -22,7 +24,8 @@ from kausaldb_spark.storage import BlockStore
 # Heavy tests are opt-in via `-m scale` (see pytest.ini), marked one by
 # one: the default run keeps the sync convergence, incremental-sync,
 # local-shadowing, re-link and job-count tests, so the one commit path of
-# sync_codebase and link_codebase has tier-1 coverage.
+# sync_codebase and link_codebase has tier-1 coverage, and the tests of the
+# answer cache and the registry across writes.
 
 A_PY = textwrap.dedent('''
     def fa():
@@ -47,13 +50,26 @@ UTIL_PY = textwrap.dedent('''
 ''')
 
 
-@pytest.fixture()
-def proj(tmp_path_factory):
-    root = tmp_path_factory.mktemp("syncproj")
+def _write_proj(root):
     (root / "a.py").write_text(A_PY)
     (root / "b.py").write_text(B_PY_V1)
     (root / "util.py").write_text(UTIL_PY)
     return root
+
+
+@pytest.fixture()
+def proj(tmp_path_factory):
+    return _write_proj(tmp_path_factory.mktemp("syncproj"))
+
+
+@pytest.fixture(scope="module")
+def linked(spark, tmp_path_factory):
+    """An engine with the `proj` tree linked as `cb`, for tests that leave
+    the tree as it is."""
+    root = _write_proj(tmp_path_factory.mktemp("linkedproj"))
+    eng = KausalEngine(spark, str(tmp_path_factory.mktemp("linked_store")))
+    eng.link_codebase(str(root), "cb")
+    return eng
 
 
 def _seqs(eng, codebase, file_path):
@@ -293,11 +309,11 @@ def test_sync_equals_fresh_link(spark, tmp_path_factory):
 
 
 # Spark jobs a one-file body-edit sync of the `proj` tree may start, on
-# 4 and 8 cores alike: 29 for the first sync after the link and 32 for a
+# 4 and 8 cores alike: 27 for the first sync after the link and 29 for a
 # second one, whose store already holds a tombstone batch. Before the sync
 # counted itself (edges written without endpoint joins, counts observed on
 # the commit's own writes, no sequence aggregates), they ran 47 and 52.
-SYNC_JOB_CEILING = 32
+SYNC_JOB_CEILING = 29
 
 
 def test_body_edit_sync_job_ceiling(spark, proj, tmp_path_factory):
@@ -415,6 +431,89 @@ def test_fresh_store_reads_start_no_spark_jobs(spark, tmp_path_factory):
     ))
     assert st.blocks_raw().dtypes == empty
     assert [r["id"] for r in st.visible("cb").collect()] == ["b1"]
+
+
+def test_cache_hit_counts_as_a_served_query(linked):
+    """X4 parity: the reference counts every query; a cache hit must land
+    in the per-type counters, not only in cache_hits."""
+    linked._cache.clear()
+    hits, served = linked.stats.cache_hits, linked.stats.queries_by_type.get("find_by_name", 0)
+    linked.find_by_name("cb", "function", "fa")
+    linked.find_by_name("cb", "function", "fa")
+    assert linked.stats.cache_hits == hits + 1
+    assert linked.stats.queries_by_type["find_by_name"] == served + 2
+
+
+def test_first_read_after_a_noop_sync_sees_the_new_registry(linked):
+    """A sync that changes no file still rewrites the registry block, a
+    store write like any other: the first read after it is a cache miss,
+    and a search that finds the registry block sees the new last_sync_at."""
+
+    def registry_block():
+        rows = linked.keyword_search("last_sync_at").collect()
+        assert [r["id"] for r in rows] == [REGISTRY_BLOCK_ID]
+        return json.loads(rows[0]["content"])["codebases"]["cb"]["last_sync_at"]
+
+    before = registry_block()
+    assert registry_block() == before  # served from the cache
+    while int(time.time()) <= before:  # last_sync_at counts whole seconds
+        time.sleep(0.05)
+    misses = linked.stats.cache_misses
+
+    stats = linked.sync_codebase("cb")
+
+    assert stats["files_changed"] == 0 and stats["files_removed"] == 0, stats
+    after = registry_block()
+    assert linked.stats.cache_misses == misses + 1
+    assert after == linked.registry()["cb"]["last_sync_at"] > before
+
+
+def test_cached_answers_miss_after_another_engines_sync(spark, proj, tmp_path_factory):
+    """Two engines share one store. The second syncs a definition away; the
+    first engine's next lookup of it misses its cache and finds nothing,
+    because that sync moved the store's mark."""
+    store = str(tmp_path_factory.mktemp("two_engines_store"))
+    first = KausalEngine(spark, store)
+    first.link_codebase(str(proj), "cb")
+    assert first.find_by_name("cb", "function", "fa").count() == 1
+    assert first.find_by_name("cb", "function", "fa").count() == 1
+    hits = first.stats.cache_hits
+    assert hits == 1
+
+    (proj / "a.py").write_text(A_PY.replace("def fa", "def fz"))
+    KausalEngine(spark, store).sync_codebase("cb")
+
+    misses = first.stats.cache_misses
+    assert first.find_by_name("cb", "function", "fa").count() == 0
+    assert first.stats.cache_misses == misses + 1
+    assert first.stats.cache_hits == hits
+    assert first.find_by_name("cb", "function", "fz").count() == 1
+
+
+def test_registry_reads_the_store_after_another_engines_write(
+    spark, proj, tmp_path_factory
+):
+    """An engine answers registry() from its own last registry write, with
+    no Spark job and a fresh dict each call, while the store's mark is the
+    one that write left. After a second engine's write it reads the store
+    again and sees that write."""
+    store = str(tmp_path_factory.mktemp("registry_reread_store"))
+    first = KausalEngine(spark, store)
+    first.link_codebase(str(proj), "cb")
+    with spark_jobs(spark, "registry-own-write") as own:
+        reg = first.registry()
+        reg["cb"]["path"] = "elsewhere"
+        assert first.registry()["cb"]["path"] == str(proj)
+    assert own["jobs"] == [], own
+
+    second = KausalEngine(spark, store)
+    second.link_codebase(str(proj), "cb2")
+
+    with spark_jobs(spark, "registry-reread") as reread:
+        reg = first.registry()
+    assert reread["jobs"], reread
+    assert sorted(reg) == ["cb", "cb2"]
+    assert reg == second.registry()
 
 
 @pytest.mark.scale
@@ -626,19 +725,6 @@ def test_link_and_sync_read_base_under_the_writer_lease(spark, proj, tmp_path_fa
 
 
 @pytest.mark.scale
-def test_cache_hit_counts_as_a_served_query(spark, proj, tmp_path_factory):
-    """X4 parity: the reference counts every query; a cache hit must land
-    in the per-type counters, not only in cache_hits."""
-    store = str(tmp_path_factory.mktemp("stats_store"))
-    eng = KausalEngine(spark, store)
-    eng.link_codebase(str(proj), "cb")
-    eng.find_by_name("cb", "function", "fa")
-    eng.find_by_name("cb", "function", "fa")
-    assert eng.stats.cache_hits == 1
-    assert eng.stats.queries_by_type["find_by_name"] == 2
-
-
-@pytest.mark.scale
 def test_status_edges_agree_with_visible_after_sync(spark, proj, tmp_path_factory):
     """status() must report the VISIBLE edge relation: after a sync the
     old epochs' edge rows remain in parquet but are shadowed."""
@@ -651,20 +737,6 @@ def test_status_edges_agree_with_visible_after_sync(spark, proj, tmp_path_factor
     assert st["edges"] == eng.store.visible_edges().count()
     # raw parquet now holds MORE rows than visible (the shadowed epoch)
     assert eng.store.edges().count() > st["edges"]
-
-
-@pytest.mark.scale
-def test_noop_sync_invalidates_result_cache(spark, proj, tmp_path_factory):
-    """A zero-change sync still rewrites the registry block (a store
-    mutation): cached results must drop so the next read sees the new
-    last_sync_at."""
-    store = str(tmp_path_factory.mktemp("noopinv_store"))
-    eng = KausalEngine(spark, store)
-    eng.link_codebase(str(proj), "cb")
-    eng.find_by_name("cb", "function", "fa")  # populate the cache
-    assert len(eng._cache) > 0
-    eng.sync_codebase("cb", root=str(proj))   # no files changed
-    assert len(eng._cache) == 0
 
 
 @pytest.mark.scale
