@@ -2,10 +2,10 @@
 (``src/kausaldb.zig:29-45``), with query statistics (X4) and a result cache
 (X1).
 
-Every answer runs once, when the call is made: it is collected through
-Arrow (``DataFrame.toArrow``) and handed back as a DataFrame over those rows
-(``createDataFrame(table, schema)``, a local relation, so reading, filtering
-or limiting it starts no Spark job).
+Every answer runs once, when the call is made: it is collected into an
+Arrow table and handed back as a DataFrame over those rows
+(``createDataFrame(table, schema)``, a local relation, so reading,
+filtering or limiting it starts no Spark job).
 
 Cache semantics (``src/query/cache.zig:26-103,181-346``): LRU + TTL keyed by
 the query signature, holding owned result rows, as the reference does: an
@@ -35,6 +35,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from kausaldb_spark.operators import context as cx
 from kausaldb_spark.operators import filtering as flt
@@ -61,6 +63,16 @@ _TRAVERSE_COLS = (
     ("unit_id", "string"), ("codebase", "string"), ("source_uri", "string"),
     ("content", "string"),
 )
+
+
+def _arrow_table(df: DataFrame):
+    """``df.toArrow()``, run through ``collect``: ``toArrow`` runs the plan
+    as an RDD, so a top-k merges in one more stage and driver-held rows
+    cost a job; ``collect`` merges on the driver and reads them in place."""
+    rows = df.collect()
+    if not rows:
+        return to_arrow_schema(df.schema).empty_table()
+    return LocalDataToArrowConversion.convert(rows, df.schema, False)
 
 
 def _bare_of_unit():
@@ -577,9 +589,9 @@ class KausalEngine:
     def _timed(
         self, qtype: str, key: tuple | None, build, with_stats: bool = False
     ) -> DataFrame:
-        """Answer with ``build()``'s rows, collected once through Arrow and
-        returned as a local DataFrame; a keyed answer is served from, or
-        kept in, the cache. ``with_stats`` counts the answer's rows."""
+        """Answer with ``build()``'s rows, collected once into an Arrow
+        table and returned as a local DataFrame; a keyed answer is served
+        from, or kept in, the cache. ``with_stats`` counts rows and scan."""
         hit = None if key is None else self._cache_get(key)
         if hit is not None:
             self.stats.cache_hits += 1
@@ -593,7 +605,12 @@ class KausalEngine:
                 self.stats.cache_misses += 1
             t0 = time.monotonic_ns()
             df = build()
-            table, schema = df.toArrow(), df.schema
+            table, schema = _arrow_table(df), df.schema
+            if with_stats:
+                # read off the finished plan, never waiting: no entry when
+                # the optimiser removed the observed scan (a zero limit)
+                seen = df._jdf.queryExecution().observedMetrics().get("rows_scanned")
+                self.stats.rows_scanned += 0 if seen.isEmpty() else seen.get().getLong(0)
             if key is not None:
                 self._cache_put(key, table, schema)
             self.stats.record(qtype, time.monotonic_ns() - t0)
@@ -666,18 +683,14 @@ class KausalEngine:
         an observe() on that scan (no extra job), which is precisely the
         reference's own cost model. Counters land in stats/status() when the
         call returns."""
-        scan = Observation()
 
         def build():
             vis = self.store.snapshot()
             if with_stats:
-                vis = vis.observe(scan, F.count(F.lit(1)).alias("n"))
+                vis = vis.observe("rows_scanned", F.count(F.lit(1)))
             return flt.filtered_query(vis, expr, offset, max_results)
 
-        out = self._timed("filtered", None, build, with_stats)
-        if with_stats:
-            self.stats.rows_scanned += scan.get["n"]
-        return out
+        return self._timed("filtered", None, build, with_stats)
 
     def traverse(
         self,

@@ -42,12 +42,11 @@ _JOB_GROUPS = itertools.count()
 def spark_jobs(spark, label):
     """Count the Spark jobs the block runs, under a job group of its own.
     Yields a dict that holds, once the block has exited, ``jobs`` (the job
-    ids), ``stage_tasks`` (the tasks each of their stages ran; a skipped
-    stage, such as the lineage of a filled cache, runs none) and ``tasks``
-    (their sum)."""
+    ids) and ``tasks`` (the tasks their stages ran; a skipped stage, such
+    as the lineage of a filled cache, runs none)."""
     sc = spark.sparkContext
     group = f"{label}-{next(_JOB_GROUPS)}"
-    out = {"jobs": [], "stage_tasks": [], "tasks": 0}
+    out = {"jobs": [], "tasks": 0}
     sc.setJobGroup(group, label)
     try:
         yield out
@@ -56,13 +55,12 @@ def spark_jobs(spark, label):
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     tracker = sc.statusTracker()
     out["jobs"] = sorted(tracker.getJobIdsForGroup(group))
-    out["stage_tasks"] = [
+    out["tasks"] = sum(
         tracker.getStageInfo(sid).numCompletedTasks
         for jid in out["jobs"]
         for sid in tracker.getJobInfo(jid).stageIds
         if tracker.getStageInfo(sid) is not None
-    ]
-    out["tasks"] = sum(out["stage_tasks"])
+    )
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
