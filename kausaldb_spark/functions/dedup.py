@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kausaldb_spark.session import checkpoint
 from kausaldb_spark.sources import guard
 
 from kausaldb_spark.functions.text import (
@@ -256,7 +257,7 @@ def jaccard_verify(
         # recomputed the whole sliver subtree (semi-join + shingling +
         # per-element md5). Materialize the duplication-rate-sized sliver
         # once instead (r13; the incremental-batch residual's root cause).
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     paired = candidates.join(
         sets.selectExpr("doc_id as doc_a", "hs as hs_a", "n_sh as n_a"),
@@ -341,7 +342,7 @@ def _wide_signature_buckets(
     return (
         wide.select("doc_id", F.explode(bands).alias("bb"))
         .select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
 
@@ -372,7 +373,7 @@ def minhash_pairs_for(
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
-        .localCheckpoint(eager=True)  # candidate ids feed two prune joins
+        .transform(checkpoint)  # candidate ids feed two prune joins
     )
     cand_ids = (
         cands.select(F.col("doc_a").alias("doc_id"))
@@ -380,7 +381,7 @@ def minhash_pairs_for(
         .distinct()
     )
     cand_corpus = corpus.join(cand_ids, "doc_id", "leftsemi")
-    return jaccard_verify(cands, cand_corpus, num, den).localCheckpoint(eager=True)
+    return jaccard_verify(cands, cand_corpus, num, den).transform(checkpoint)
 
 
 def minhash_near_duplicates(
@@ -436,7 +437,7 @@ def ngram_jaccard_pairs(
         ).alias("n_sh"),
     )
     rare_sh = (
-        sh.join(rare, "shingle").join(sizes, "doc_id").localCheckpoint(eager=True)
+        sh.join(rare, "shingle").join(sizes, "doc_id").transform(checkpoint)
     )
     a = rare_sh.selectExpr("shingle", "doc_id as doc_a", "n_sh as sa")
     b = rare_sh.selectExpr("shingle", "doc_id as doc_b", "n_sh as sb")
@@ -455,7 +456,7 @@ def ngram_jaccard_pairs(
         .agg(F.count("*").alias("_n_shared_rare"))
         .where(F.col("_n_shared_rare") >= min_shared)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)  # candidate ids feed the prune join
+        .transform(checkpoint)  # candidate ids feed the prune join
     )
     cand_ids = (
         cands.select(F.col("doc_a").alias("doc_id"))
@@ -463,7 +464,7 @@ def ngram_jaccard_pairs(
         .distinct()
     )
     cand_corpus = corpus.join(cand_ids, "doc_id", "leftsemi")
-    return jaccard_verify(cands, cand_corpus, num, den).localCheckpoint(eager=True)
+    return jaccard_verify(cands, cand_corpus, num, den).transform(checkpoint)
 
 
 def contaminated_docs(
@@ -658,7 +659,7 @@ def simhash_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = (
         ex.groupBy("doc_id").agg(*aggs)
         .select("doc_id", sh_col.cast("int").alias("sh"))
-        .localCheckpoint(eager=True)  # signature pass runs once, not per join side
+        .transform(checkpoint)  # signature pass runs once, not per join side
     )
     a = sigs.selectExpr("sh", "doc_id as doc_a")
     b = sigs.selectExpr("sh", "doc_id as doc_b")
@@ -736,7 +737,7 @@ def simhash_band_pairs(
     scale. Output (doc_a, doc_b, hamming)."""
     corpus = dedup_corpus(spark, sf_dir)
     all_bands = [f"b{b}" for b in range(N_SIMHASH_BANDS)]
-    sigs = _simhash64_signatures(corpus).localCheckpoint(eager=True)
+    sigs = _simhash64_signatures(corpus).transform(checkpoint)
     # one signature pass feeds all 4 band joins
 
     cands = None
@@ -1025,7 +1026,7 @@ def near_dup_vs_corpus(
         # candidate ids feed the corpus-sliver semi-join plus both prune
         # references inside jaccard_verify — same reuse contract as
         # minhash_pairs_for's checkpointed cands (r13)
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # verify on new-batch shingles + the candidate corpus sliver only
     cand_corpus = corpus_docs.join(

@@ -10,7 +10,9 @@ timestamp arithmetic.
 
 from __future__ import annotations
 
+import contextlib
 import os
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -104,3 +106,32 @@ def local_frame(
     return spark.createDataFrame(
         pd.DataFrame.from_records(rows, columns=schema.names), schema
     )
+
+
+_CHECKPOINTS: ContextVar[list | None] = ContextVar("kausal_checkpoints", default=None)
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, released with the ``releasing``
+    block it runs in, if any."""
+    out = df.localCheckpoint(eager=True)
+    if (held := _CHECKPOINTS.get()) is not None:
+        held.append(out)
+    return out
+
+
+@contextlib.contextmanager
+def releasing():
+    """Yield a list for the frames a block persists. When the block exits,
+    raising or not, unpersist them and the local checkpoints ``checkpoint``
+    made in it (in this thread), whose blocks a long-lived session would
+    otherwise keep until the JVM happens to collect their RDDs."""
+    held, token = [], _CHECKPOINTS.set([])
+    try:
+        yield held
+    finally:
+        for df in held:
+            df.unpersist()
+        for df in _CHECKPOINTS.get():
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        _CHECKPOINTS.reset(token)

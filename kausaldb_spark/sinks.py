@@ -16,9 +16,12 @@ This module is that sink, Spark-native:
   ``shard=K/`` in file order; ``maxRecordsPerFile`` bounds file sizes for
   object-store-friendly parallel reads;
 - the manifest (per-shard row counts + an order-sensitive content hash) is a
-  #shards-row aggregate — tiny, driver-collected, written as JSON next to the
-  data. Two writes with the same seed produce byte-identical manifests; the
-  loader re-hashes at read time to detect truncation/corruption.
+  #shards-row aggregate — tiny, driver-collected and driver-sorted, written
+  as JSON next to the data. Two writes with the same seed produce
+  byte-identical manifests; the loader re-hashes at read time to detect
+  truncation/corruption. Both read the written layout back with its schema
+  pinned from one part file's footer, so neither pays a schema-inference
+  job.
 
 The reference engine has no sharded sink (its LLM output is a single text
 stream, ``src/cli/executor.zig`` formatting); this is north-star pipeline
@@ -32,8 +35,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from kausaldb_spark.functions.text import shard_and_shuffle  # noqa: F401 (re-export)
 
 
 def _with_shard_order(docs: DataFrame, n_shards: int, seed: int, id_col: str) -> DataFrame:
@@ -70,7 +71,8 @@ def write_training_shards(
     — implemented as xor-free bigint sum of md5(pos || row_key) chunks,
     which is order-insensitive per se, so position is mixed INTO each term
     to make row order part of the digest. Reordering, dropping, or
-    duplicating any row changes the digest."""
+    duplicating any row changes the digest. The manifest re-reads the
+    written shards (``shard_digests``) and sorts its rows by shard."""
     work = _with_shard_order(docs, n_shards, seed, id_col)
     writer = (
         work.repartition(n_shards, F.col("shard"))
@@ -85,20 +87,47 @@ def write_training_shards(
     # manifest written with plain open(): this sink targets posix paths
     # (local/NFS); an object-store deployment swaps this one write for its
     # filesystem client — the Spark-side layout above is store-agnostic
+    rows = shard_digests(docs.sparkSession, path, id_col).collect()
     manifest = {
         "n_shards": n_shards,
         "seed": seed,
         "id_col": id_col,
         "digest_version": DIGEST_VERSION,
-        "shards": shard_digests(docs.sparkSession, path, id_col).collect(),
+        "shards": [
+            {"shard": r["shard"], "n_rows": r["n_rows"], "digest": r["digest"]}
+            for r in sorted(rows, key=lambda r: r["shard"])
+        ],
     }
-    manifest["shards"] = [
-        {"shard": r["shard"], "n_rows": r["n_rows"], "digest": r["digest"]}
-        for r in manifest["shards"]
-    ]
     with open(os.path.join(path, "_kdb_manifest.json"), "w") as fh:
         json.dump(manifest, fh, indent=1, sort_keys=True)
     return manifest
+
+
+def _read_written(spark: SparkSession, path: str) -> DataFrame | None:
+    """The written layout, read with the schema Spark would infer, pinned
+    from the first part file's footer (the writer's stored Spark schema,
+    else the parquet one) plus the ``shard int`` partition column: no
+    schema-inference job. None when ``path`` holds no part file (a
+    zero-survivor write leaves only ``_SUCCESS``); a missing ``path``
+    raises, so a typo'd verify path never reads as zero shards."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType, StructType
+
+    if not os.path.isdir(path):
+        raise FileNotFoundError(
+            f"shard_digests: no written corpus at {path!r} — a zero-"
+            "survivor run still leaves the output directory (+_SUCCESS)"
+        )
+    parts = [os.path.join(root, f) for root, _dirs, files in os.walk(path)
+             for f in files if f.endswith(".parquet")]
+    if not parts:
+        return None
+    footer = pq.read_metadata(min(parts))
+    stored = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    schema = (StructType.fromJson(json.loads(stored)) if stored
+              else from_arrow_schema(footer.schema.to_arrow_schema()))
+    return spark.read.schema(schema.add("shard", IntegerType())).parquet(path)
 
 
 # Digest formula versions (ADVICE r7: a formula change must not make old
@@ -118,37 +147,21 @@ def shard_digests(
     digest_version: int = DIGEST_VERSION,
 ) -> DataFrame:
     """Per-shard (n_rows, order-sensitive digest) over the written layout —
-    the loader-side verification. Each row hashes (its position in the
-    shard's training order || its payload) and the digest sums those
-    hashes' leading 56 bits (no overflow ambiguity at any realistic shard
-    size). The SUM is commutative, but the position salt makes the result
-    order-sensitive anyway: reordering, dropping, or duplicating any row
-    changes it. Verify-time cost = one window to re-derive positions (a
-    per-shard local sort, bounded by corpus/n_shards) + one groupBy."""
+    the loader-side verification — in no particular row order (callers
+    sort the ``n_shards`` rows on the driver). Each row hashes (its
+    position in the shard's training order || its payload) and the digest
+    sums those hashes' leading 56 bits (no overflow ambiguity at any
+    realistic shard size). The SUM is commutative, but the position salt
+    makes the result order-sensitive anyway: reordering, dropping, or
+    duplicating any row changes it. Verify-time cost = 2 jobs: one hash
+    exchange on shard, which the window (positions, a per-shard local
+    sort bounded by corpus/n_shards) and the groupBy share, then the
+    collect. A layout with no part file gives no rows."""
     from pyspark.sql import Window
 
-    # a run whose gates dropped EVERY row writes no part files (dynamic
-    # partitioning of zero rows leaves only _SUCCESS) — that is an empty
-    # corpus, not corruption: report zero shards instead of failing
-    # schema inference (r10, found by the all-stages composition test).
-    # A MISSING directory is a different thing — a typo'd verify path must
-    # not read as "zero shards, all good" (r10 ADVICE): os.walk on a
-    # nonexistent path silently yields nothing, so check existence first.
-    if not os.path.isdir(path):
-        raise FileNotFoundError(
-            f"shard_digests: no written corpus at {path!r} — a zero-"
-            "survivor run still leaves the output directory (+_SUCCESS)"
-        )
-    has_parquet = any(
-        f.endswith(".parquet")
-        for _root, _dirs, files in os.walk(path)
-        for f in files
-    )
-    if not has_parquet:
-        return spark.createDataFrame(
-            [], "shard int, n_rows bigint, digest string"
-        )
-    df = spark.read.parquet(path)
+    df = _read_written(spark, path)
+    if df is None:
+        return spark.createDataFrame([], "shard int, n_rows bigint, digest string")
     payload_cols = [c for c in df.columns if c not in ("shard", "_key")]
     pos = F.row_number().over(
         Window.partitionBy("shard").orderBy("_key", id_col)
@@ -189,7 +202,6 @@ def shard_digests(
             F.count("*").cast("bigint").alias("n_rows"),
             F.sum("_chunk").cast("decimal(38,0)").cast("string").alias("digest"),
         )
-        .orderBy("shard")
     )
 
 
