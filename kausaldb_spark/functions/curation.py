@@ -13,6 +13,11 @@ Output: one row per split with document and token counts — the "what does my
 training set look like after curation" report. Every stage is a pure
 DataFrame transformation over the same persisted corpus scan, so the whole
 pipeline is one shuffle per stage boundary, no driver loops.
+
+``curate_and_write`` runs the write path, raw corpus to verified training
+shards. Each stage's funnel count is observed on an evaluation that runs
+anyway, never taken by a count action of its own. What the pass persists or
+checkpoints is released when it returns or raises.
 """
 
 from __future__ import annotations
